@@ -432,15 +432,14 @@ def test_token_budget_selection_distributed_parity(spark, monkeypatch):
 
 
 def test_order_key_forms_identical_total_order(spark):
-    """The decimal(38,0) packed order key (canonical since the r11 A/B)
-    and the r10 string form must induce the SAME total order — pinned on
-    the adversarial shape that motivated the key: duplicate timestamps,
-    id 0, and a huge id near int64's edge."""
-    import importlib
-
+    """The decimal(38,0) packed order key and the zero-padded string key
+    (the Spark twin of the oracle's `EVENT_ORDER_KEY_SQL`) must induce
+    the SAME total order — pinned on the adversarial shape that
+    motivated the key: duplicate timestamps, id 0, and a huge id near
+    int64's edge."""
     from pyspark.sql import functions as F
 
-    from trading_dashboard_spark import query_registry as qr
+    from trading_dashboard_spark.query_registry import event_order_key
 
     rows = [
         ("2024-01-02 09:30:00.000001", 7),
@@ -453,18 +452,15 @@ def test_order_key_forms_identical_total_order(spark):
     df = spark.createDataFrame(rows, "ts_s string, event_id long").select(
         F.to_timestamp("ts_s").alias("ts"), "event_id"
     )
-    orders = {}
-    old = qr._ORDER_KEY_FORM
-    try:
-        for form in ("string", "decimal"):
-            qr._ORDER_KEY_FORM = form
-            key = qr.event_order_key()
-            orders[form] = [
-                (r["ts"], r["event_id"])
-                for r in df.orderBy(key).collect()
-            ]
-    finally:
-        qr._ORDER_KEY_FORM = old
+    string_key = F.concat(
+        F.lpad(F.unix_micros(F.col("ts")).cast("string"), 20, "0"),
+        F.lpad(F.col("event_id").cast("string"), 20, "0"),
+    )
+    orders = {
+        form: [(r["ts"], r["event_id"]) for r in df.orderBy(key).collect()]
+        for form, key in (("string", string_key),
+                          ("decimal", event_order_key()))
+    }
     assert orders["string"] == orders["decimal"]
     # and the order is (ts, event_id) lexicographic
     assert orders["string"] == sorted(orders["string"])

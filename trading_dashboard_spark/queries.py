@@ -1,12 +1,11 @@
 """Aggregated query registry — importing this module registers every
-query/oracle pair from all tiers (driver contract entry point)."""
+query/oracle pair from all tiers (driver contract entry point).
+
+Registry order is definition order: the modules below, in this order, and
+each module's `register` calls top to bottom. Importing does no other work.
+"""
 
 from __future__ import annotations
-
-import json
-import os
-import re
-import subprocess
 
 from .query_registry import QUERY_REGISTRY, QuerySpec, register  # noqa: F401
 from . import queries_relational  # noqa: F401
@@ -19,703 +18,3 @@ from . import queries_streaming  # noqa: F401
 from . import queries_extra  # noqa: F401
 from . import queries_analytics  # noqa: F401
 from . import queries_dashboard  # noqa: F401
-
-#: Queries with a green row in CORRECTNESS_r01.json (driver round 1).
-_R01_VERIFIED = (
-    "pricing_summary", "top_gainers", "market_avg_by_date",
-    "latest_event_per_user", "top_customers_by_revenue", "regional_revenue",
-    "orders_in_range_by_priority", "parts_regex_filter", "priority_buckets",
-    "customer_balance_health", "distinct_segments", "global_lineitem_stats",
-    "multi_key_sorted_events", "top_events_by_value", "customers_with_orders",
-    "customers_without_orders", "extreme_value_events_union",
-    "finished_only_customers_except", "event_scalar_functions",
-    "weekend_adjusted_days", "daily_pct_change", "lead_next_value",
-    "three_day_trends", "ma_crossover_signals", "volatility_patterns",
-    "sma_dual_semantics", "bollinger_bands", "rsi_indicator",
-    "cumulative_user_totals", "top3_days_per_user", "prev_available_close",
-    "asof_purchase_click", "merge_upsert_digest", "insert_if_absent_digest",
-    "range_join_opening_window", "multi_resolution_rollup",
-    "exact_dedup_docs", "token_stats_by_lang", "doc_quality_features",
-    "language_id_counts", "fingerprint_uniqueness_by_source",
-    "minhash_near_dup_pairs", "ngram_jaccard_near_dups", "doc_sentiment",
-    "simhash_fingerprints", "blocked_jaccard_within_source", "top_trigrams",
-    "knn_probe_top10", "knn_per_vector_top3", "embedding_stats_by_label",
-)
-
-#: Queries with a green row in CORRECTNESS_r02.json (driver round 2).
-_R02_VERIFIED = (
-    "late_shipment_priorities", "value_percentiles_by_type", "macd_indicator",
-    "repetition_signals", "tfidf_top_terms", "unigram_logprob_score",
-    "near_dup_clusters", "embedding_cosine_near_dup", "ivf_ann_probe_top5",
-    "embedding_int8_quantization", "media_metadata_by_type",
-    "media_decode_features", "media_frame_plan", "train_test_split_stats",
-    "doc_length_quartiles_by_lang", "quality_cube_by_lang_source",
-    "docs_with_embeddings_by_lang", "token_budget_shards",
-    "cross_split_contamination", "cms_user_frequencies",
-    "stratified_sample_by_lang", "fixed_window_packing", "heavy_hitter_users",
-    "streaming_hourly_type_counts", "streaming_session_windows",
-    "streaming_stateful_user_totals", "streaming_dedup_ingest",
-    "streaming_sliding_counts", "streaming_click_attribution",
-    "streaming_nation_enrichment", "regional_revenue_rollup",
-    "event_type_pivot", "explode_user_event_types", "ema_indicator",
-    "signal_price_correlation", "skew_salted_event_totals",
-    "event_sessionization", "props_json_value_buckets",
-    "type_dow_grouping_sets", "user_value_distribution_ranks",
-    "orders_quality_expectations", "click_purchase_funnel", "top_losers",
-    "high_volatility_top10", "latest_prediction_per_symbol",
-    "company_news_latest5", "trading_patterns_top100", "company_list",
-    "stock_history_range", "market_trends_latest",
-)
-
-#: Queries with a driver row in CORRECTNESS_r03.json (round 3; includes the
-#: three rows-only-by-design entries — a row is a row for rotation purposes).
-_R03_VERIFIED = (
-    "promo_revenue_by_month", "large_quantity_orders", "dormant_rich_customers",
-    "customer_order_counts", "extendedprice_decile_stats",
-    "nation_revenue_share_of_region", "stochastic_oscillator",
-    "on_balance_volume", "rolling_zscore_anomalies", "max_drawdown_per_user",
-    "calendar_week_range_avg", "window_value_positions", "user_market_beta",
-    "asof_click_tolerance_30m", "click_next_purchase_forward_asof",
-    "gap_filled_daily_close", "doc_pii_redaction", "chunk_boilerplate_ratio",
-    "quality_gate_summary", "cluster_survivor_selection",
-    "vocabulary_growth_by_source", "label_centroids",
-    "embedding_covariance_top_pairs", "knn_multi_probe_top3",
-    "media_audio_rms_windows", "doc_chunks", "doc_char_entropy",
-    "reservoir_sample_per_lang", "source_mixture_plan", "curation_funnel",
-    "streaming_hourly_ohlc", "daily_bars_unpivot", "user_value_quartiles",
-    "scd2_price_history", "user_retention_cohorts", "hourly_ohlc_candles",
-    "orders_snapshot_diff", "conversion_latency_quantiles",
-    "repeat_status_customers_intersect", "daily_new_vs_returning",
-    "lsh_ann_top3", "corpus_sketch_profile", "ml_next_day_prediction",
-    "range_join_opening_window", "multi_resolution_rollup", "macd_indicator",
-    "exact_dedup_docs", "token_stats_by_lang", "doc_quality_features",
-    "language_id_counts",
-)
-
-#: Queries with a green row in CORRECTNESS_r04.json (driver round 4 —
-#: 50/50 hash-green, all first-time verifications of round-4 queries).
-_R04_VERIFIED = (
-    "daily_demand_full_outer", "nation_top_customers_listagg",
-    "fulfillment_lag_quantiles", "price_rank_with_ties",
-    "rolling_median_value", "atr_indicator", "williams_r_indicator",
-    "cci_indicator", "donchian_channels", "vwap_daily",
-    "sharpe_ratio_per_user", "dow_return_seasonality", "drawdown_durations",
-    "bullish_engulfing_days", "top_correlated_user_pairs",
-    "holt_trend_smoothing", "holt_forecast_accuracy",
-    "bigram_logprob_score", "bm25_keyword_search",
-    "levenshtein_name_near_dups", "bigram_collocations_pmi",
-    "phrase_search_hash_join", "verbatim_overlap_pairs",
-    "dup_cluster_size_histogram", "kmeans_embedding_clusters",
-    "pca_top_component_power_iteration", "hybrid_rrf_retrieval",
-    "sq8_rerank_top5", "knn_label_agreement", "lsh_recall_at_3",
-    "ivf_recall_at_5", "media_vit_patch_plan", "media_jpeg_roundtrip",
-    "weighted_sample_per_source", "streaming_abandoned_clicks",
-    "streaming_welford_anomalies", "variant_props_stats",
-    "pagerank_trade_graph", "small_quantity_part_revenue",
-    "cheapest_supplier_per_part", "important_nation_value_share",
-    "modal_event_type_per_user", "value_histogram_20bins",
-    "markov_event_transitions", "event_path_trigrams", "event_pair_lift",
-    "rolling_corr_user_vs_market", "bloom_prefiltered_order_revenue",
-    "event_key_skew_profile", "max_concurrent_events_per_day",
-)
-
-#: Queries with a green row in CORRECTNESS_r05.json (driver round 5 —
-#: 50/50 hash-green: the 43 round-4-session-2 first-timers plus the two
-#: pins and five stale re-verifications, exactly as predicted).
-_R05_VERIFIED = (
-    "doc_sentiment", "lsh_ann_top3", "ml_next_day_prediction",
-    "phrase_search_hash_join", "macd_indicator", "regional_revenue_rollup",
-    "event_type_pivot", "rfm_customer_segments", "week_over_week_close_change",
-    "lineitem_column_profile", "user_behavior_entropy", "benford_price_digits",
-    "price_trend_slope_per_user", "incremental_agg_maintenance",
-    "event_type_dow_chi2", "lttb_downsampled_closes",
-    "floored_running_balance", "funnel_step_waterfall",
-    "referential_integrity_audit", "logistic_purchase_model",
-    "mad_robust_outliers", "keyset_paginated_events",
-    "value_mean_families_by_type", "logistic_calibration_deciles",
-    "twap_daily", "recency_weighted_user_value",
-    "surplus_click_days_except_all", "null_ordering_price_ranks",
-    "decimal_exact_revenue", "cusum_mean_shift_alerts",
-    "coactivity_triangle_count", "ab_test_welch_t", "ab_test_conversion_z",
-    "winsorized_value_means", "market_concentration_hhi",
-    "price_elasticity_by_brand", "kaplan_meier_signup_to_purchase",
-    "interarrival_burstiness_per_user", "pareto_revenue_coverage",
-    "coactivity_degree_distribution", "value_psi_drift",
-    "padding_waste_by_length_bucket", "transition_latency_matrix",
-    "freshness_audit", "anova_eta_squared", "activity_coverage_gaps",
-    "lorenz_curve_deciles", "session_bounce_profile", "orderkey_gap_audit",
-    "weekday_variance_explained",
-)
-
-#: Queries with a green row in CORRECTNESS_r06.json (driver round 6 —
-#: 50/50 hash-green: the 14 round-6 registrations, the two pins, and 34
-#: stale re-verifications covering every touched query, as predicted).
-_R06_VERIFIED = (
-    "lsh_recall_at_3", "streaming_abandoned_clicks", "bm25_keyword_search",
-    "lsh_ann_top3", "macd_indicator", "fingerprint_uniqueness_by_source",
-    "minhash_near_dup_pairs", "ngram_jaccard_near_dups",
-    "simhash_fingerprints", "blocked_jaccard_within_source", "top_trigrams",
-    "repetition_signals", "tfidf_top_terms", "unigram_logprob_score",
-    "near_dup_clusters", "exact_dedup_docs", "token_stats_by_lang",
-    "doc_quality_features", "language_id_counts", "doc_pii_redaction",
-    "chunk_boilerplate_ratio", "quality_gate_summary",
-    "cluster_survivor_selection", "vocabulary_growth_by_source",
-    "bigram_logprob_score", "levenshtein_name_near_dups",
-    "bigram_collocations_pmi", "verbatim_overlap_pairs",
-    "dup_cluster_size_histogram", "doc_sentiment", "phrase_search_hash_join",
-    "knn_probe_top10", "knn_per_vector_top3", "embedding_stats_by_label",
-    "embedding_cosine_near_dup", "ivf_ann_probe_top5", "bpe_learned_merges",
-    "bpe_token_stats", "minhash_banding_sweep", "cross_lingual_contamination",
-    "bpe_packed_shards", "pq_search_top5", "ivfpq_search_top5",
-    "pq_recall_at_5", "ivfpq_recall_at_5", "semantic_dedup_survivors",
-    "pq_distortion_audit", "grouped_heavy_hitters",
-    "streaming_scd2_asof_enrichment", "streaming_interval_full_outer_audit",
-)
-
-#: Queries with a green row in CORRECTNESS_r07.json (driver round 7 —
-#: 50/50 hash-green: the 6 round-7 registrations plus change-aware
-#: re-verifies of every query the xxhash64-fingerprint, adaptive-LSH,
-#: blocked-BLAS, and VADER-anchor edits touched).
-_R07_VERIFIED = (
-    "chunk_boilerplate_ratio", "verbatim_overlap_pairs",
-    "minhash_banding_sweep", "cross_lingual_contamination",
-    "kmeans_embedding_clusters", "ivf_recall_at_5", "lsh_ann_top3",
-    "pq_recall_at_5", "ivfpq_recall_at_5", "semantic_dedup_survivors",
-    "pq_distortion_audit", "macd_indicator", "exact_dedup_docs",
-    "token_stats_by_lang", "doc_quality_features", "language_id_counts",
-    "fingerprint_uniqueness_by_source", "minhash_near_dup_pairs",
-    "ngram_jaccard_near_dups", "doc_sentiment", "simhash_fingerprints",
-    "blocked_jaccard_within_source", "top_trigrams", "repetition_signals",
-    "tfidf_top_terms", "bigram_logprob_score", "unigram_logprob_score",
-    "near_dup_clusters", "doc_pii_redaction", "quality_gate_summary",
-    "cluster_survivor_selection", "vocabulary_growth_by_source",
-    "bm25_keyword_search", "levenshtein_name_near_dups",
-    "bigram_collocations_pmi", "phrase_search_hash_join",
-    "dup_cluster_size_histogram", "bpe_learned_merges", "bpe_token_stats",
-    "bpe_packed_shards", "embedding_int8_quantization", "label_centroids",
-    "embedding_covariance_top_pairs", "knn_multi_probe_top3",
-    "bpe_phrase_merges_256", "eval_window_decontamination",
-    "minhash_incremental_admission", "heldout_bigram_fit_by_source",
-    "ivf_codebook_refresh", "embedding_drift_by_label",
-)
-
-#: MINIMUM window slots guaranteed to stale-changed re-verification.
-#: Round-4 lesson (verdict "what's wrong" #3): as a residual this
-#: silently starved — ~93 new queries saturated the 50-slot window and
-#: zero re-verify slots fired.  Now a FLOOR: up to this many stale
-#: entries are keyed AHEAD of the never-verified block, the rest of the
-#: stale set follows it.
-_REVERIFY_RESERVE = 12
-
-#: Observed driver verification window (50 rows in every
-#: CORRECTNESS_r*.json to date) — used to size the stale head so fresh
-#: entries that FIT the window are never evicted by old-churn staleness.
-_DRIVER_WINDOW = 50
-
-#: Explicit round-directive re-verifications, keyed ahead of everything.
-#: Round 8: the lexicon-corruption fix (pitfall/pitfalls restored per
-#: the r7 ADVICE high item) changes vader_score for any text containing
-#: those tokens — pin doc_sentiment per the standing rule that any
-#: sentiment.py / vader_lexicon.py edit forces a fresh driver row.
-#: Round 12 (VERDICT r11 ask #2): the r11 optimization round's riskiest
-#: rewrites rotated OUT of the 50-row driver window in the same round
-#: their execution paths changed (driver reconciliation fast path,
-#: bucket-aggregation admission, driver-local sampled-BPE fit, the
-#: array-expression Lloyd argmin) — pin them so the r12 driver window
-#: attests the rewrites with fresh hash-green rows.
-_PIN_REVERIFY: tuple[str, ...] = (
-    "doc_sentiment",
-    "dedup_cluster_delta",
-    "minhash_incremental_admission",
-    "tokenizer_fertility_by_source",
-    "bpe_sampled_token_stats",
-    "kmeans_embedding_clusters",
-    "ivf_codebook_refresh",
-)
-
-_PKG_DIR = os.path.dirname(os.path.abspath(__file__))
-_REPO_ROOT = os.path.dirname(_PKG_DIR)
-_PKG_NAME = os.path.basename(_PKG_DIR)
-
-
-def _artifact_rounds() -> dict[str, int]:
-    """name -> latest driver round with a usable row, read straight from
-    the ``CORRECTNESS_r*.json`` artifacts on disk.
-
-    This is the round-8 verdict's #1 ask: each round's artifact lands
-    AFTER the round's final commit, so a hand-maintained tuple can never
-    contain the current round's rows at review time — the ledger must be
-    derived from the artifacts themselves.  A row counts as a driver
-    check unless it recorded a real failure (``err`` other than the
-    by-design ``no_oracle`` rows-only check, or an explicit hash
-    mismatch) — failures must stay in the fresh block and be re-run, not
-    remembered as green."""
-    out: dict[str, int] = {}
-    for fname in os.listdir(_REPO_ROOT):
-        m = re.match(r"CORRECTNESS_r(\d+)\.json$", fname)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        try:
-            with open(os.path.join(_REPO_ROOT, fname)) as fh:
-                rows = json.load(fh)
-        except (OSError, ValueError):
-            continue
-        if not isinstance(rows, dict):
-            continue
-        for name, row in rows.items():
-            if not isinstance(row, dict):
-                continue
-            err = row.get("err")
-            if err is not None and err != "no_oracle":
-                continue
-            if err is None and row.get("hash_match") is False:
-                continue
-            out[name] = max(out.get(name, 0), rnd)
-    return out
-
-
-def _verified_rounds() -> dict[str, int]:
-    """name -> latest driver round with a row for it.
-
-    Union of the artifact-derived ledger (authoritative, always current
-    — survives the artifact-lands-after-final-commit timing that made
-    the hand tuples structurally stale in r7/r8) and the historical
-    ``_R0N_VERIFIED`` tuples (belt-and-braces: they also document WHY
-    each round's window looked the way it did)."""
-    out: dict[str, int] = {}
-    for rnd, names in (
-        (1, _R01_VERIFIED), (2, _R02_VERIFIED),
-        (3, _R03_VERIFIED), (4, _R04_VERIFIED),
-        (5, _R05_VERIFIED), (6, _R06_VERIFIED),
-        (7, _R07_VERIFIED),
-    ):
-        for n in names:
-            out[n] = rnd
-    try:
-        artifact = _artifact_rounds()
-    except Exception:
-        artifact = {}  # ledger must never take down the registry import
-    for n, rnd in artifact.items():
-        out[n] = max(out.get(n, 0), rnd)
-    return out
-
-
-def _current_round() -> int:
-    """Derive the build round from the driver's artifacts instead of a
-    hand-bumped constant (the round-3 verdict's ask: forgetting the bump
-    silently re-ran the same reserve slice)."""
-    rounds = [
-        int(m.group(1))
-        for f in os.listdir(_REPO_ROOT)
-        if (m := re.match(r"CORRECTNESS_r(\d+)\.json$", f))
-    ]
-    return max(rounds) + 1 if rounds else 1
-
-
-def _round_boundaries() -> dict[int, str]:
-    """round -> commit hash of the driver's ``round N: ...`` artifact
-    commit (the snapshot the round-N verification row attests to)."""
-    out = subprocess.run(
-        ["git", "log", "--format=%H\t%s"],
-        cwd=_REPO_ROOT, capture_output=True, text=True, timeout=30,
-    )
-    if out.returncode != 0:
-        raise RuntimeError(out.stderr.strip() or "git log failed")
-    bounds: dict[int, str] = {}
-    for line in out.stdout.splitlines():
-        sha, _, subject = line.partition("\t")
-        m = re.match(r"round (\d+):", subject)
-        if m:
-            bounds.setdefault(int(m.group(1)), sha)  # newest wins per round
-    return bounds
-
-
-def _changed_since(commit: str) -> set[str]:
-    """Repo-relative paths changed between ``commit`` and the WORKING TREE
-    (so uncommitted edits in the current session count as changes)."""
-    out = subprocess.run(
-        ["git", "diff", "--name-only", commit],
-        cwd=_REPO_ROOT, capture_output=True, text=True, timeout=30,
-    )
-    if out.returncode != 0:
-        raise RuntimeError(out.stderr.strip() or "git diff failed")
-    return {p for p in out.stdout.splitlines() if p}
-
-
-def _module_dep_closure() -> dict[str, set[str]]:
-    """module file -> transitive set of package files it depends on.
-
-    Edges come from a static scan for intra-package imports
-    (``from .x import``, ``from ..x.y import``, ``from trading_….x
-    import``) anywhere in the source — query functions import their
-    operators inside the function body, which a module-level regex still
-    catches. Granularity is the module: a change to text/analysis.py
-    marks every query in modules that (transitively) import it."""
-    files: dict[str, str] = {}  # repo-relative path -> source
-    for root, _dirs, names in os.walk(_PKG_DIR):
-        for name in names:
-            if name.endswith(".py"):
-                path = os.path.join(root, name)
-                rel = os.path.relpath(path, _REPO_ROOT)
-                try:
-                    with open(path, encoding="utf-8") as fh:
-                        files[rel] = fh.read()
-                except OSError:
-                    files[rel] = ""
-
-    def resolve(rel_from: str, dots: str, modpath: str) -> str | None:
-        """Resolve a relative/absolute intra-package import to a file."""
-        if dots:
-            base = os.path.dirname(rel_from)
-            for _ in range(len(dots) - 1):
-                base = os.path.dirname(base)
-        else:
-            base = _PKG_NAME
-        parts = [p for p in modpath.split(".") if p]
-        cand = os.path.join(base, *parts) if parts else base
-        for c in (cand + ".py", os.path.join(cand, "__init__.py")):
-            if c in files:
-                return c
-        return None
-
-    imp_re = re.compile(
-        rf"^\s*from\s+(\.+|{re.escape(_PKG_NAME)}\.?)([\w.]*)\s+import",
-        re.M,
-    )
-    edges: dict[str, set[str]] = {}
-    for rel, src in files.items():
-        deps: set[str] = set()
-        for m in imp_re.finditer(src):
-            head, modpath = m.group(1), m.group(2)
-            dots = head if head.startswith(".") else ""
-            target = resolve(rel, dots, modpath)
-            if target:
-                deps.add(target)
-        edges[rel] = deps
-
-    closure: dict[str, set[str]] = {}
-
-    def walk(rel: str) -> set[str]:
-        if rel in closure:
-            return closure[rel]
-        closure[rel] = {rel}  # cycle guard: self while in progress
-        acc = {rel}
-        for dep in edges.get(rel, ()):
-            acc |= walk(dep)
-        closure[rel] = acc
-        return acc
-
-    for rel in files:
-        walk(rel)
-    return closure
-
-
-def _fn_segments(src: str) -> tuple[dict[str, str], str]:
-    """Split module source into {top-level function name: decorated
-    source segment} plus the blank-line-stripped module-level remainder.
-    A segment runs from the first decorator line (the @register call
-    carries the oracle SQL) to the function's last line. Unparseable
-    source degrades to everything-is-remainder (always compares
-    changed)."""
-    import ast
-
-    lines = src.splitlines()
-    fns: dict[str, str] = {}
-    covered: set[int] = set()
-    try:
-        tree = ast.parse(src)
-    except SyntaxError:
-        return {}, src
-    for node in tree.body:
-        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
-            start = min(
-                [d.lineno for d in node.decorator_list] + [node.lineno]
-            )
-            end = node.end_lineno or node.lineno
-            fns[node.name] = "\n".join(lines[start - 1:end])
-            covered.update(range(start, end + 1))
-    rest = "\n".join(
-        ln for i, ln in enumerate(lines, 1)
-        if i not in covered and ln.strip()
-    )
-    return fns, rest
-
-
-def _fn_changes(rel: str, commit: str) -> tuple[set[str], bool]:
-    """Function-granular diff of module ``rel`` between ``commit`` and the
-    working tree: (top-level function names whose decorated source
-    segment differs or is new, module-level-code-changed flag).
-
-    Module granularity alone floods the driver's bounded verification
-    window: appending ONE query to a 30-query module marked all 30 stale
-    rank 0, pushing genuinely-changed queries (e.g. a dependency edit to
-    the sentiment lexicon) past the window. A segment spans from the
-    first decorator line (the @register call carries the oracle SQL) to
-    the function's last line, so oracle edits count as function changes.
-    The remainder (module-level constants, shared SQL fragments) is
-    compared blank-line-insensitively; if IT changed, every query in the
-    module is conservatively stale — EXCEPT pure additions (round-6
-    lesson: new module-level helpers shipped alongside new queries
-    rank-0-flooded 40+ untouched siblings ahead of a genuinely edited
-    macd_indicator): a pre-existing function cannot have depended on
-    lines that did not exist when it was last verified, so the
-    module-level flag fires only when old remainder lines were removed
-    or modified. Unreadable old versions (new file) report everything
-    changed."""
-    segments = _fn_segments
-    try:
-        with open(os.path.join(_REPO_ROOT, rel), encoding="utf-8") as fh:
-            new_src = fh.read()
-    except OSError:
-        return set(), True
-    out = subprocess.run(
-        ["git", "show", f"{commit}:{rel}"],
-        cwd=_REPO_ROOT, capture_output=True, text=True, timeout=30,
-    )
-    if out.returncode != 0:  # file didn't exist at the boundary
-        new_fns, _ = segments(new_src)
-        return set(new_fns), True
-    old_fns, old_rest = segments(out.stdout)
-    new_fns, new_rest = segments(new_src)
-    changed = {
-        name for name, seg in new_fns.items() if old_fns.get(name) != seg
-    }
-    removed_or_modified = set(old_rest.splitlines()) - set(new_rest.splitlines())
-    return changed, bool(removed_or_modified)
-
-
-def _stale_verified(verified_round: dict[str, int]) -> dict[str, int]:
-    """Queries whose implementing source (module dep-closure) changed
-    since the round that last verified them — these jump the rotation
-    queue so the driver re-checks changed code the same round it ships,
-    instead of up to ~8 blind-stride rounds later.
-
-    Returns name -> priority (lower = verify sooner):
-
-    0. the query's OWN FUNCTION (or its module's shared module-level
-       code) changed THIS round (since the latest round boundary) — the
-       code the driver is about to attest shipped with fresh edits;
-    1. a SPECIFIC transitive dependency (an operator/function module)
-       changed this round;
-    2. only shared plumbing (query_registry/session — imported by every
-       query module) changed this round;
-    3. own function/module-level code changed since the query's last
-       green round (older churn blind-stride rotation never re-covered);
-    4. specific-dependency staleness since the last green round;
-    5. plumbing-only staleness since the last green round.
-
-    Own-module staleness is FUNCTION-granular (_fn_changes): appending a
-    new query to a module does not mark its 30 siblings stale. Plumbing
-    edits still mark everything stale — but BELOW queries whose actual
-    operator chain changed, so a one-line registry tweak cannot crowd a
-    lexicon rewrite out of the driver's bounded window."""
-    bounds = _round_boundaries()
-    closure = _module_dep_closure()
-    changed_by_round: dict[int, set[str]] = {}
-    fn_changes_cache: dict[tuple[str, str], tuple[set[str], bool]] = {}
-    plumbing = {
-        os.path.join(_PKG_NAME, "query_registry.py"),
-        os.path.join(_PKG_NAME, "session.py"),
-        os.path.join(_PKG_NAME, "queries.py"),
-    }
-
-    def changed(rnd: int) -> set[str]:
-        if rnd not in changed_by_round:
-            changed_by_round[rnd] = _changed_since(bounds[rnd])
-        return changed_by_round[rnd]
-
-    def own_changed(rel: str, fn_name: str, rnd: int) -> bool:
-        key = (rel, bounds[rnd])
-        if key not in fn_changes_cache:
-            fn_changes_cache[key] = _fn_changes(rel, bounds[rnd])
-        fns, module_level = fn_changes_cache[key]
-        return module_level or fn_name in fns
-
-    def rank_at(rel, fn_name, deps, rnd, base):
-        """0/1/2 staleness class at boundary ``rnd``, offset by ``base``;
-        None when nothing relevant changed."""
-        hit = deps & changed(rnd)
-        if rel in hit and own_changed(rel, fn_name, rnd):
-            return base
-        if hit - {rel} - plumbing:
-            return base + 1
-        if hit - {rel}:
-            return base + 2
-        return None
-
-    latest = max(bounds) if bounds else None
-    stale: dict[str, int] = {}
-    for name, rnd in verified_round.items():
-        spec = QUERY_REGISTRY.get(name)
-        if spec is None:
-            continue
-        mod = getattr(spec.fn, "__module__", "") or ""
-        fn_name = getattr(spec.fn, "__name__", name)
-        rel = os.path.join(*mod.split(".")) + ".py"
-        deps = closure.get(rel, {rel})
-        if latest is not None:
-            r = rank_at(rel, fn_name, deps, latest, 0)
-            if r is not None:
-                stale[name] = r
-                continue
-        if rnd not in bounds:
-            stale[name] = 0  # unknown snapshot — re-verify, don't assume
-            continue
-        r = rank_at(rel, fn_name, deps, rnd, 3)
-        if r is not None:
-            stale[name] = r
-    return stale
-
-
-def _stale_delta(stale_names: set[str]) -> dict[str, int]:
-    """name -> total changed-line count (git numstat vs the latest round
-    boundary) across the query's changed non-plumbing dependencies —
-    the within-rank ordering signal for the stale block."""
-    bounds = _round_boundaries()
-    if not bounds:
-        return {}
-    boundary = bounds[max(bounds)]
-    out = subprocess.run(
-        ["git", "diff", "--numstat", boundary],
-        cwd=_REPO_ROOT, capture_output=True, text=True, timeout=30,
-    )
-    if out.returncode != 0:
-        return {}
-    lines_changed: dict[str, int] = {}
-    for line in out.stdout.splitlines():
-        parts = line.split("\t")
-        if len(parts) == 3 and parts[0].isdigit() and parts[1].isdigit():
-            lines_changed[parts[2]] = int(parts[0]) + int(parts[1])
-    closure = _module_dep_closure()
-    plumbing = {
-        os.path.join(_PKG_NAME, "query_registry.py"),
-        os.path.join(_PKG_NAME, "session.py"),
-        os.path.join(_PKG_NAME, "queries.py"),
-    }
-    delta: dict[str, int] = {}
-    for name in stale_names:
-        spec = QUERY_REGISTRY.get(name)
-        if spec is None:
-            continue
-        mod = getattr(spec.fn, "__module__", "") or ""
-        rel = os.path.join(*mod.split(".")) + ".py"
-        deps = (closure.get(rel, {rel}) - plumbing) | {rel}
-        delta[name] = sum(lines_changed.get(d, 0) for d in deps)
-    return delta
-
-
-def _window_order(
-    pins: list[str],
-    fresh: list[str],
-    stale_sorted: list[str],
-    rest: list[str],
-    window: int = _DRIVER_WINDOW,
-    reserve: int = _REVERIFY_RESERVE,
-) -> list[str]:
-    """Pure ordering kernel for the driver's bounded window.
-
-    ``pins`` lead unconditionally.  Then FLOOR semantics (round-4
-    verdict #3/#6): when never-verified pressure saturates the whole
-    window, ``reserve`` stale entries are still keyed AHEAD of the
-    fresh block — re-verification of changed code is a floor new
-    queries cannot starve to zero (round 4: ~93 new queries, 0
-    re-verify slots fired).  When the fresh block FITS inside the
-    window, fresh keeps priority (the round-5 directive: every
-    registered query gets a driver row before anything else) and stale
-    takes only the leftover slots."""
-    stale_sorted = [n for n in stale_sorted if n not in pins]
-    rest = [n for n in rest if n not in pins]
-    fresh_n = len(fresh) + len(pins)
-    head_n = reserve if fresh_n >= window else max(0, window - fresh_n)
-    return (
-        pins + stale_sorted[:head_n] + fresh
-        + stale_sorted[head_n:] + rest
-    )
-
-
-def _front_unverified() -> None:
-    """Re-key QUERY_REGISTRY so the driver's bounded verification window
-    is spent where it buys the most evidence:
-
-    1. _PIN_REVERIFY entries (explicit round directives);
-    2. CHANGE-AWARE stale entries up to the reserve floor — previously
-       green queries whose implementing source (module dependency
-       closure, git-diffed against the round boundary that last
-       verified them) has changed.  Sized by `_window_order`: a
-       guaranteed floor under new-query pressure, leftover-slots-only
-       when the fresh block fits the window;
-    3. never-driver-verified entries with value oracles (fresh, oracle),
-    4. never-driver-verified rows-only entries,
-    5. stale entries beyond the head,
-    6. the remaining proven queries, stride-rotated by the round number
-       (derived from the CORRECTNESS_r*.json artifacts, not hand-bumped)
-       so the tail slice still walks the whole proven set over time.
-
-    Git/artifact failures degrade to the round-3 behavior (blind stride
-    rotation) — ordering must never take down the registry import."""
-    verified_round = _verified_rounds()
-    verified = set(verified_round)
-    fresh_oracle = {
-        n: s for n, s in QUERY_REGISTRY.items()
-        if n not in verified and s.oracle is not None
-    }
-    fresh_rows_only = {
-        n: s for n, s in QUERY_REGISTRY.items()
-        if n not in verified and s.oracle is None
-    }
-    proven_names = [n for n in QUERY_REGISTRY if n in verified]
-    # A typo in the hand tuples would silently front the wrong set —
-    # raise.  Artifact-derived names are allowed to reference queries
-    # that were since renamed/retired (the artifacts are immutable
-    # history); those simply don't participate in ordering.
-    tuple_names = set().union(
-        _R01_VERIFIED, _R02_VERIFIED, _R03_VERIFIED, _R04_VERIFIED,
-        _R05_VERIFIED, _R06_VERIFIED, _R07_VERIFIED,
-    )
-    unknown = tuple_names - set(QUERY_REGISTRY)
-    if unknown:
-        raise ValueError(
-            f"ordering tuples name unregistered queries: {sorted(unknown)}")
-
-    try:
-        rnd = _current_round()
-    except Exception:
-        rnd = 4
-    try:
-        stale = _stale_verified(verified_round)
-    except Exception:
-        stale = {}
-    try:
-        delta = _stale_delta(set(stale))
-    except Exception:
-        delta = {}
-
-    # Directly-edited functions first, then dependency staleness ordered
-    # by the SIZE of the dependency diff (a 2,000-line lexicon rewrite
-    # outranks a one-line operator tweak for the driver's bounded
-    # window), oldest last-green round as the tiebreak.
-    stale_first = sorted(
-        (n for n in proven_names if n in stale),
-        key=lambda n: (
-            stale[n], -delta.get(n, 0), verified_round[n],
-            proven_names.index(n),
-        ),
-    )
-    rest = [n for n in proven_names if n not in stale]
-    # Rotate the unchanged-proven list so a different reserve-sized slice
-    # follows the stale block each round; stride by the reserve so
-    # consecutive rounds don't overlap.
-    if rest:
-        off = (rnd * _REVERIFY_RESERVE) % len(rest)
-        rest = rest[off:] + rest[:off]
-    pins = [n for n in _PIN_REVERIFY if n in verified and n in QUERY_REGISTRY]
-    names = _window_order(
-        pins, list(fresh_oracle) + list(fresh_rows_only), stale_first, rest,
-    )
-    ordered = {n: QUERY_REGISTRY[n] for n in names}
-    QUERY_REGISTRY.clear()
-    QUERY_REGISTRY.update(ordered)
-
-
-_front_unverified()

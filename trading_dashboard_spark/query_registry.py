@@ -21,7 +21,7 @@ integration test of the public API.
 
 from __future__ import annotations
 
-import os
+import functools
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
@@ -53,40 +53,17 @@ def register(name: str, oracle: str | None, tags: tuple[str, ...] = (), doc: str
     return deco
 
 
-
-
 def _with_confs(fn):
+    @functools.wraps(fn)
     def inner(spark: SparkSession, sf_dir: str, **kw) -> DataFrame:
         apply_runtime_confs(spark)
         return fn(spark, sf_dir, **kw)
 
-    inner.__doc__ = fn.__doc__
-    inner.__name__ = getattr(fn, "__name__", "query")
-    # the defining module, not this one — the change-aware verification
-    # rotation (queries._stale_verified) maps queries to source files
-    # through __module__
-    inner.__module__ = getattr(fn, "__module__", inner.__module__)
     return inner
 
 
 def _t(spark, sf_dir, name) -> DataFrame:
     return load_table(spark, name, sf_dir)
-
-
-#: key form for `event_order_key`: "decimal" (canonical since r11) or
-#: "string" (the r10 original). A packed LONG is impossible: epoch
-#: micros need ~51 bits and any useful id range ≥20 more — over
-#: int64's 63 — so the packed-numeric form is DECIMAL(38,0):
-#: micros · 10¹⁹ + id, exact for the full non-negative int64 id range
-#: (≤ ~1.8e34 + 9.2e18, 35 digits), identical TOTAL ORDER to the
-#: string (the key is only ever a max_by/min_by ordering argument —
-#: its value never reaches output, so the oracle keeps the VARCHAR
-#: twin). Adopted after tools/ab_order_key.py won BOTH run orders at
-#: sf0.1 (6.40 vs 11.81 s and 6.02 vs 7.09 s over the 7 close-contract
-#: headline queries — a 16-byte Decimal128 compare beats a 40-char
-#: UTF8String compare in every hash-aggregate probe); recorded in
-#: BENCHMARKS.md.
-_ORDER_KEY_FORM = os.environ.get("SPARK_GRAFT_ORDER_KEY", "decimal")
 
 
 def event_order_key(ts_col: str = "ts", id_col: str = "event_id"):
@@ -97,20 +74,25 @@ def event_order_key(ts_col: str = "ts", id_col: str = "event_id"):
     `max_by(value, ts)` lane), so every "last/first value" aggregate
     must order by a UNIQUE key both engines share. Non-negative domains
     by construction (events ≥ epoch; ids ≥ 0), so lexicographic string
-    order == numeric order. (`_ORDER_KEY_FORM` selects the DECIMAL(38,0)
-    packed form — canonical since the r11 A/B — or the original string;
-    same total order either way.)"""
-    if _ORDER_KEY_FORM == "decimal":
-        # 10¹⁹ exceeds int64, so the literal must be born DECIMAL
-        # (F.lit(10**19) dies in Python→Java long marshalling)
-        return (
-            F.unix_micros(F.col(ts_col)).cast("decimal(19,0)")
-            * F.expr("CAST('10000000000000000000' AS DECIMAL(20,0))")
-            + F.col(id_col).cast("decimal(19,0)")
-        )
-    return F.concat(
-        F.lpad(F.unix_micros(F.col(ts_col)).cast("string"), 20, "0"),
-        F.lpad(F.col(id_col).cast("string"), 20, "0"),
+    order == numeric order.
+
+    A packed LONG is impossible: epoch micros need ~51 bits and any
+    useful id range ≥20 more — over int64's 63 — so the key is
+    DECIMAL(38,0): micros · 10¹⁹ + id, exact for the full non-negative
+    int64 id range (≤ ~1.8e34 + 9.2e18, 35 digits), with the same total
+    order as the zero-padded string twin `EVENT_ORDER_KEY_SQL`. The key
+    is only ever a max_by/min_by ordering argument, never output, so the
+    oracle keeps that VARCHAR form. The decimal form won an A/B against
+    the string form at sf0.1 (6.40 vs 11.81 s and 6.02 vs 7.09 s over
+    the 7 close-contract headline queries, both run orders — a 16-byte
+    Decimal128 compare beats a 40-char UTF8String compare in every
+    hash-aggregate probe); recorded in BENCHMARKS.md."""
+    # 10¹⁹ exceeds int64, so the literal must be born DECIMAL
+    # (F.lit(10**19) dies in Python→Java long marshalling)
+    return (
+        F.unix_micros(F.col(ts_col)).cast("decimal(19,0)")
+        * F.expr("CAST('10000000000000000000' AS DECIMAL(20,0))")
+        + F.col(id_col).cast("decimal(19,0)")
     )
 
 
