@@ -3,6 +3,7 @@ guards by hand (SURVEY.md §5: nulls, zero divisors, weekend dates,
 single-row partitions, empty inputs)."""
 
 import datetime as dt
+import os
 
 from pyspark.sql import Row, functions as F
 
@@ -519,3 +520,160 @@ def test_day_scoped_order_key_matches_general_key_within_day_groups(spark):
     ).select(F.to_timestamp("ts_s").alias("ts"), "event_id", "value")
     with pytest.raises(Exception, match="day_scoped_order_key"):
         bad.select(qr.day_scoped_order_key().alias("k")).collect()
+
+
+# --- version-keyed relation cache (io/cache.py) ---------------------------
+
+def _events_table(seed: int, n: int, first_id: int = 0, start_us: int = 0,
+                  values=None):
+    """``n`` increasing-ts ticks for 20 users over ~3 days, as pyarrow."""
+    import numpy as np
+    import pyarrow as pa
+
+    g = np.random.default_rng(seed)
+    day_us = 86_400_000_000
+    ts = 1_704_067_200_000_000 + start_us + np.cumsum(
+        1 + g.integers(0, 3 * day_us // n, n)
+    )
+    drawn = np.round(g.exponential(50.0, n), 2)
+    return pa.table({
+        "event_id": np.arange(first_id, first_id + n, dtype=np.int64),
+        "ts": pa.array(ts, pa.timestamp("us")),
+        "user_id": g.integers(0, 20, n, dtype=np.int64),
+        "event_type": ["click"] * n,
+        "value": pa.array(drawn if values is None else values, pa.float64()),
+        "props": ['{"k": 1}'] * n,
+    })
+
+
+def _land(table, path: str, **kw) -> None:
+    """Write ``table`` next to ``path`` and rename it into place, so a
+    reader sees the old file or the new one, never a partial write."""
+    import pyarrow.parquet as pq
+
+    pq.write_table(table, f"{path}.incoming", **kw)
+    os.replace(f"{path}.incoming", path)
+
+
+def _duckdb_bars(table) -> set:
+    import duckdb
+
+    from trading_dashboard_spark.query_registry import DAILY_SQL
+
+    con = duckdb.connect()
+    con.register("events", table)
+    return set(con.execute(
+        f"WITH {DAILY_SQL} SELECT user_id, strftime(d, '%Y-%m-%d'), close,"
+        " high, low, n_events FROM daily"
+    ).fetchall())
+
+
+def _spark_bars(df) -> set:
+    return {(r["user_id"], str(r["d"]), r["close"], r["high"], r["low"],
+             r["n_events"]) for r in df.collect()}
+
+
+def test_daily_close_checkpointed_once_per_events_version(spark, tmp_path):
+    """Three consecutive `events` versions, each landed by atomic rename:
+    the bars equal the DuckDB oracle on every version, a repeat call on
+    the same version returns the same relation without starting a Spark
+    job, and exactly one miss is paid per version."""
+    import pyarrow as pa
+
+    from trading_dashboard_spark.io.cache import cache_stats
+    from trading_dashboard_spark.query_registry import _daily_close
+
+    path = str(tmp_path / "events.parquet")
+    sc = spark.sparkContext
+    before = cache_stats()["daily_close"]
+    table = _events_table(0, 400)
+    for k in range(3):
+        if k:
+            last_us = table.column("ts").cast(pa.int64())[-1].as_py()
+            batch = _events_table(k, 60, table.num_rows,
+                                  last_us - 1_704_067_200_000_000)
+            table = pa.concat_tables([table, batch])
+        _land(table, path)
+        bars = _daily_close(spark, str(tmp_path))
+        assert _spark_bars(bars) == _duckdb_bars(table), f"version {k}"
+
+        group = f"bars-repeat-{k}"
+        sc.setJobGroup(group, "repeat call on one events version")
+        try:
+            again = _daily_close(spark, str(tmp_path))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert again is bars
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+    after = cache_stats()["daily_close"]
+    assert after["misses"] - before["misses"] == 3
+    assert after["hits"] - before["hits"] == 3
+
+
+def test_version_key_misses_same_size_replacement_with_preserved_mtime(
+    spark, tmp_path
+):
+    """A replacement with the old size AND the old mtime (``os.utime``,
+    as ``cp -p`` does) is still a new version: the key carries the inode
+    and ctime, so the bars come from the new file."""
+    from trading_dashboard_spark.io.cache import cache_stats, file_version
+    from trading_dashboard_spark.query_registry import _daily_close
+
+    path = str(tmp_path / "events.parquet")
+    fixed = {"compression": "NONE", "use_dictionary": False}
+    v1 = _events_table(7, 300)
+    v2 = _events_table(7, 300, values=[float(i % 97) for i in range(300)])
+    _land(v1, path, **fixed)
+    st1 = os.stat(path)
+    key1 = file_version(path)
+    assert _spark_bars(_daily_close(spark, str(tmp_path))) == _duckdb_bars(v1)
+
+    import pyarrow.parquet as pq
+
+    pq.write_table(v2, f"{path}.incoming", **fixed)
+    os.utime(f"{path}.incoming", ns=(st1.st_atime_ns, st1.st_mtime_ns))
+    os.replace(f"{path}.incoming", path)
+    st2 = os.stat(path)
+    assert (st2.st_size, st2.st_mtime_ns) == (st1.st_size, st1.st_mtime_ns)
+    assert file_version(path) != key1
+
+    misses = cache_stats()["daily_close"]["misses"]
+    bars = _daily_close(spark, str(tmp_path))
+    assert cache_stats()["daily_close"]["misses"] == misses + 1
+    assert _spark_bars(bars) == _duckdb_bars(v2) != _duckdb_bars(v1)
+
+
+def test_version_cache_concurrent_misses_compute_once(spark):
+    """Four threads on one cold key pay one computation; while it runs,
+    a lookup on a different key is served without waiting for it."""
+    import threading
+    from concurrent.futures import ThreadPoolExecutor
+
+    from trading_dashboard_spark.io.cache import VersionCache, cache_stats
+
+    cache = VersionCache("concurrency-test", 4)
+    started, release = threading.Event(), threading.Event()
+
+    def slow():
+        started.set()
+        assert release.wait(30)
+        return object()
+
+    with ThreadPoolExecutor(4) as pool:
+        futures = [pool.submit(cache.get_or_compute, spark, "cold", slow)
+                   for _ in range(4)]
+        assert started.wait(30)
+        with ThreadPoolExecutor(1) as side:
+            other = side.submit(
+                cache.get_or_compute, spark, "other", lambda: "fast"
+            )
+            assert other.result(timeout=10) == "fast"  # "cold" still runs
+        assert cache.get_or_compute(spark, "other", lambda: "recomputed") == "fast"
+        assert not any(f.done() for f in futures)
+        release.set()
+        values = [f.result(timeout=30) for f in futures]
+
+    assert all(v is values[0] for v in values)
+    stats = cache_stats()["concurrency-test"]
+    assert (stats["misses"], stats["hits"]) == (2, 4)  # 3 waiters + "other"

@@ -1596,6 +1596,61 @@ def test_removed_ids_memo_hits_and_safe_eviction(spark, tmp_path):
     assert not qt._REMOVED_IDS_MEMO
 
 
+def test_corpus_memos_miss_after_in_place_corpus_replacement(spark, tmp_path):
+    """The corpus memos key on plan hash PLUS the input files' version:
+    the scan plan of ``documents.parquet`` hashes the same before and
+    after the file is atomically replaced, so a plan-keyed memo would
+    serve the old corpus's removal set. Replace the corpus with one whose
+    planted duplicate sits elsewhere; the removal closure and the CCNet
+    scores must follow the new file."""
+    import os
+
+    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from trading_dashboard_spark import queries_text as qt
+    from trading_dashboard_spark.io.cache import cache_stats
+    from trading_dashboard_spark.io.readers import load_table
+
+    path = tmp_path / "documents.parquet"
+
+    def land(dup: int, of: int, n: int) -> None:
+        text = [" ".join(f"r{i}y{k}" for k in range(10)) for i in range(n)]
+        text[dup] = text[of]  # the planted exact duplicate pair
+        pdf = pd.DataFrame({
+            "doc_id": range(len(text)), "text": text,
+            "lang": ["en"] * len(text), "source": ["s"] * len(text),
+            "n_chars": [len(t) for t in text],
+        })
+        pq.write_table(pa.Table.from_pandas(pdf), f"{path}.incoming")
+        os.replace(f"{path}.incoming", path)
+
+    def removed_and_scores():
+        docs = load_table(spark, "documents", str(tmp_path))
+        removed = {r["id"] for r in qt.nonsurvivor_removed_ids(docs).collect()}
+        scores = {tuple(r) for r in qt._ccnet_scored_df(spark, docs).collect()}
+        return removed, scores
+
+    def fresh_scores():
+        docs = load_table(spark, "documents", str(tmp_path))
+        return {tuple(r) for r in
+                qt._ccnet_scored_df(spark, docs, memo=False).collect()}
+
+    land(dup=6, of=0, n=7)
+    removed, scores = removed_and_scores()
+    assert removed == {6}  # equal lengths: the lower id survives
+    before = cache_stats()["removed_ids"]
+    assert removed_and_scores() == (removed, scores)
+    assert cache_stats()["removed_ids"]["hits"] == before["hits"] + 1
+
+    land(dup=5, of=2, n=8)  # same path and schema: same plan hash
+    removed2, scores2 = removed_and_scores()
+    assert removed2 == {5}
+    assert scores2 == fresh_scores() != scores
+    assert cache_stats()["removed_ids"]["misses"] == before["misses"] + 1
+
+
 def test_bloom_decontamination_planted_and_saturated(spark, tmp_path, monkeypatch):
     """Planted corpus for `bloom_ngram_decontamination` (r11, Brown et
     al. 2020 13-gram rule): at the production 2^20-bit geometry the

@@ -11,7 +11,6 @@ Catalyst gets exact column pruning and predicate pushdown.
 from __future__ import annotations
 
 import os
-import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -19,21 +18,16 @@ from pyspark.sql import functions as F, types as T
 
 from ..schemas import RAW_QUOTE, TESTDATA_SCHEMAS
 from ..session import apply_runtime_confs
+from .cache import VersionCache, file_version
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-#: (applicationId, abspath, st_mtime_ns, st_size) → (weakref(session),
-#: scan DataFrame). A *plan* memo, not a result memo: the DataFrame handle
-#: is immutable and every action on it re-reads the parquet — what this
-#: skips is the ~100 ms/call driver-side DataSource resolution
-#: (file listing + footer schema inference + py4j chatter) that
-#: ``spark.read.parquet`` pays on every invocation. Measured r11: 145 ms
-#: per load_table call → ~1 ms on a memo hit; the bench's 23 headline
-#: queries make ~46 such calls per timed pass. The stat-key invalidates
-#: on any rewrite of the file/directory (Spark writes via tmp+rename, so
-#: the mtime always moves); non-statable URIs bypass the memo entirely.
-_SCAN_MEMO: dict = {}
-_SCAN_MEMO_MAX = 64
+#: lazy scan handles per table version (see io/cache.py)
+_SCANS = VersionCache("scans", 64)
+
+
+def table_path(name: str, sf_dir: str = DEFAULT_SF_DIR) -> str:
+    return f"{sf_dir.rstrip('/')}/{name}.parquet"
 
 
 def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> DataFrame:
@@ -57,26 +51,13 @@ def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> 
     session.RUNTIME_CONFS).
     """
     apply_runtime_confs(spark)
-    path = f"{sf_dir.rstrip('/')}/{name}.parquet"
-    key = None
-    try:
-        st = os.stat(path)
-        key = (
-            spark.sparkContext.applicationId,
-            os.path.abspath(path),
-            st.st_mtime_ns,
-            st.st_size,
-        )
-    except OSError:
-        key = None  # non-local / unstatable: always resolve fresh
-    if key is not None:
-        hit = _SCAN_MEMO.get(key)
-        if hit is not None:
-            ref, cached = hit
-            if ref() is spark:
-                _SCAN_MEMO[key] = _SCAN_MEMO.pop(key)  # LRU refresh
-                return cached
-            _SCAN_MEMO.pop(key, None)  # stale session
+    path = table_path(name, sf_dir)
+    return _SCANS.get_or_compute(
+        spark, file_version(path), lambda: _scan(spark, name, path)
+    )
+
+
+def _scan(spark: SparkSession, name: str, path: str) -> DataFrame:
     df = spark.read.parquet(path)
     expected = TESTDATA_SCHEMAS.get(name)
     if expected is not None:
@@ -90,10 +71,6 @@ def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> 
                     field.name,
                     F.timestamp_micros(F.expr(f"`{field.name}` div 1000")),
                 )
-    if key is not None:
-        _SCAN_MEMO[key] = (weakref.ref(spark), df)
-        while len(_SCAN_MEMO) > _SCAN_MEMO_MAX:
-            _SCAN_MEMO.pop(next(iter(_SCAN_MEMO)))
     return df
 
 

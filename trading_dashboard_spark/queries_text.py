@@ -12,7 +12,7 @@ import math
 
 from pyspark.sql import Window as W, functions as F
 
-from .operators.memo import PlanMemo
+from .io.cache import VersionCache, relation_version
 from .query_registry import _t, pround, register
 from .text.analysis import LANG_MARKERS, stopwords_sql_list
 
@@ -1161,22 +1161,16 @@ def _removal_ctes() -> str:
     )"""
 
 
-#: Session-scoped memo for `nonsurvivor_removed_ids` (r9 verdict #7):
-#: five registered compositions (published pipeline, budgeted manifest,
-#: soft dedup, dedup→LM effect, dedup→DSIR) each recompute the SAME
-#: removal closure — LSH pairs plus the checkpointed CC loop, the
-#: dominant constant of the whole composition family (~190 s of the
-#: ×100 suite). The corpus is immutable within a run, so the closure is
-#: memoized on the corpus' ANALYZED-PLAN semantic hash (same sf_dir ⇒
-#: same parquet scan plan ⇒ same hash; a different corpus — adversarial
-#: batteries, replicas — gets its own entry). Values are eagerly
+#: Memo for `nonsurvivor_removed_ids` (r9 verdict #7): five registered
+#: compositions (published pipeline, budgeted manifest, soft dedup,
+#: dedup→LM effect, dedup→DSIR) each recompute the SAME removal closure
+#: — LSH pairs plus the checkpointed CC loop, the dominant constant of
+#: the whole composition family (~190 s of the ×100 suite). The closure
+#: is cached per corpus version (plan hash plus input-file stat, see
+#: io/cache.py), so a rewritten corpus misses. Values are eagerly
 #: localCheckpointed one-column id relations (dup-rate-bounded, slim),
-#: the bm25 persisted-slim-cache precedent. Bounded: oldest entries are
-#: released once the memo exceeds a handful of corpora.
-#: keying/LRU/weakref semantics live in :class:`PlanMemo` (r10 ADVICE:
-#: applicationId key — never ``id(session)`` — plus a session weakref
-#: guard and hit-refreshed LRU eviction).
-_REMOVED_IDS_MEMO = PlanMemo(4)
+#: the bm25 persisted-slim-cache precedent.
+_REMOVED_IDS_MEMO = VersionCache("removed_ids", 4, checkpoint=True)
 _REMOVED_IDS_MEMO_MAX = _REMOVED_IDS_MEMO.max_entries
 
 #: Sibling memo one level DOWN the same closure (r11 optimization): the
@@ -1184,15 +1178,15 @@ _REMOVED_IDS_MEMO_MAX = _REMOVED_IDS_MEMO.max_entries
 #: plus the checkpointed CC loop, shared verbatim by `near_dup_clusters`,
 #: `cluster_survivor_selection`, `soft_dedup_effective_tokens` AND the
 #: removal closure above (which derives its survivor election from it).
-#: Same keying/eviction/weakref discipline as `_REMOVED_IDS_MEMO`; values
-#: are slim two-long-column checkpoints bounded by the clustered-doc
-#: count (dup-rate-bounded, never corpus-sized).
-_CLUSTER_LABELS_MEMO = PlanMemo(4)
+#: Same keying as `_REMOVED_IDS_MEMO`; values are slim two-long-column
+#: checkpoints bounded by the clustered-doc count (dup-rate-bounded,
+#: never corpus-sized).
+_CLUSTER_LABELS_MEMO = VersionCache("cluster_labels", 4, checkpoint=True)
 
 
 def clear_removed_ids_memo() -> None:
-    """Release every memoized removal-closure checkpoint (tests; or any
-    caller that knows the underlying files changed in place)."""
+    """Release every memoized removal-closure checkpoint (tests, and the
+    legacy bench's cold-run timings)."""
     from .operators.ranks import release_rank_cache
 
     _REMOVED_IDS_MEMO.clear(release_rank_cache)
@@ -1205,7 +1199,7 @@ def near_dup_cluster_labels(docs, memo: bool = True):
     shared across its three plan references via ``persist=True``; the
     result is eagerly checkpointed and the cache scope-released inside
     the builder) fed through min-label connected components. Memoized
-    per (session, corpus plan hash) exactly like the removal closure —
+    per (session, corpus version) exactly like the removal closure —
     the four cluster-consuming queries differ only in the aggregate they
     run over this relation."""
     from .text.clusters import connected_components
@@ -1219,7 +1213,9 @@ def near_dup_cluster_labels(docs, memo: bool = True):
         return connected_components(pairs)
 
     if memo:
-        return _CLUSTER_LABELS_MEMO.get_or_compute(docs, _compute)
+        return _CLUSTER_LABELS_MEMO.get_or_compute(
+            docs.sparkSession, relation_version(docs), _compute
+        )
     return _compute()
 
 
@@ -1252,7 +1248,9 @@ def nonsurvivor_removed_ids(docs, memo: bool = True):
         )
 
     if memo:
-        return _REMOVED_IDS_MEMO.get_or_compute(docs, _compute)
+        return _REMOVED_IDS_MEMO.get_or_compute(
+            docs.sparkSession, relation_version(docs), _compute
+        )
     return _compute()
 
 
@@ -4448,7 +4446,7 @@ def fails_or(cols):
 #: published-pipeline composition on the same corpus. The value is the
 #: SLIM (doc_id, score) relation — two columns, one row per ≥2-token
 #: doc — the same class as the removal-closure id set.
-_CCNET_SCORED_MEMO = PlanMemo(4)
+_CCNET_SCORED_MEMO = VersionCache("ccnet_scored", 4, checkpoint=True)
 
 
 def clear_ccnet_scored_memo() -> None:
@@ -4516,7 +4514,9 @@ def _ccnet_scored_df(spark, docs, memo: bool = True):
         )
 
     if memo:
-        return _CCNET_SCORED_MEMO.get_or_compute(docs, _compute)
+        return _CCNET_SCORED_MEMO.get_or_compute(
+            spark, relation_version(docs), _compute
+        )
     return _compute()
 
 

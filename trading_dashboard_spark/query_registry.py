@@ -28,7 +28,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
 from .functions import portable_round_sql, pround  # noqa: F401
-from .io.readers import load_table
+from .io.cache import VersionCache, file_version
+from .io.readers import load_table, table_path
 from .session import apply_runtime_confs
 
 
@@ -137,6 +138,10 @@ def day_scoped_order_key(ts_col: str = "ts", id_col: str = "event_id"):
     )
 
 
+#: per-(user, day) bars, one eager checkpoint per ``events`` version
+_DAILY_BARS = VersionCache("daily_close", 4, checkpoint=True)
+
+
 def _daily_close(spark, sf_dir) -> DataFrame:
     """Shared shape: events → per-(user, day) OHLC-ish bar.
 
@@ -150,21 +155,32 @@ def _daily_close(spark, sf_dir) -> DataFrame:
     lanes (DuckDB's max_by skips NULL args natively; Spark's returns
     the arg at the max key even when NULL, so the engine lane nulls
     the KEY for NULL values to match — a valueless tick is not a
-    price)."""
-    ev = _t(spark, sf_dir, "events")
-    # day-aligned groupBy ⇒ the day-scoped packed-long key is exact
-    # (see day_scoped_order_key — same argmax, one int64 compare)
-    key = day_scoped_order_key()
-    return ev.groupBy(
-        F.col("user_id"), F.to_date("ts").alias("d")
-    ).agg(
-        F.max_by(
-            "value", F.when(F.col("value").isNotNull(), key)
-        ).alias("close"),
-        F.max("value").alias("high"),
-        F.min("value").alias("low"),
-        F.count(F.lit(1)).alias("n_events"),
-    )
+    price).
+
+    The result is a per-version checkpoint: the first call on an
+    ``events`` version runs the aggregate eagerly and caches it as a
+    ``localCheckpoint`` (io/cache.py); later calls on the same version
+    return that relation without starting a job, and a replaced
+    ``events`` file is a new version."""
+
+    def bars() -> DataFrame:
+        ev = _t(spark, sf_dir, "events")
+        # day-aligned groupBy ⇒ the day-scoped packed-long key is exact
+        # (see day_scoped_order_key — same argmax, one int64 compare)
+        key = day_scoped_order_key()
+        return ev.groupBy(
+            F.col("user_id"), F.to_date("ts").alias("d")
+        ).agg(
+            F.max_by(
+                "value", F.when(F.col("value").isNotNull(), key)
+            ).alias("close"),
+            F.max("value").alias("high"),
+            F.min("value").alias("low"),
+            F.count(F.lit(1)).alias("n_events"),
+        )
+
+    version = file_version(table_path("events", sf_dir))
+    return _DAILY_BARS.get_or_compute(spark, version, bars)
 
 
 #: DuckDB CTE equivalent of `_daily_close` (shared across oracle strings).
