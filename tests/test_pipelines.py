@@ -58,6 +58,48 @@ def test_stock_pipeline_end_to_end_and_idempotent(spark, landing, tmp_path):
     assert counts2["pattern_rows"] == counts1["pattern_rows"]
 
 
+def test_stock_pipeline_consecutive_days_accumulate(spark, tmp_path):
+    """Three consecutive trading days each add their rows to history
+    (2, 4, 6), patterns equal ``derive_patterns(history)`` on their keys,
+    and re-running an earlier day after a later one changes neither
+    table."""
+    landing = tmp_path / "landing"
+    for i, day in enumerate(("08", "09", "10")):
+        ddir = landing / "2024" / "01" / day
+        ddir.mkdir(parents=True)
+        for sym, base in (("AAA", 10.0), ("BBB", 20.0)):
+            c = base + 2 * i
+            row = {"symbol": sym, "date": f"2024-01-{day}", "o": c - 1, "h": c * 1.1,
+                   "l": c - 1, "c": c, "pc": c - 2, "d": 2.0, "dp": 1.0, "v": 100 + i}
+            (ddir / f"{sym}_quote.json").write_text(json.dumps(row))
+    hist, pats = str(tmp_path / "history"), str(tmp_path / "patterns")
+    keys = ["symbol", "trade_date", "pattern"]
+
+    def tables():
+        return (
+            {tuple(r) for r in spark.read.parquet(hist).collect()},
+            {tuple(r) for r in spark.read.parquet(pats).collect()},
+        )
+
+    counts = [
+        run_stock_pipeline(spark, str(landing), hist, pats, "2024", "01", day)["history_rows"]
+        for day in ("08", "09", "10")
+    ]
+    assert counts == [2, 4, 6]
+    history = spark.read.parquet(hist)
+    assert {tuple(r) for r in history.groupBy("symbol").count().collect()} == {
+        ("AAA", 3), ("BBB", 3)
+    }
+    assert {tuple(r) for r in spark.read.parquet(pats).select(*keys).collect()} == {
+        tuple(r) for r in derive_patterns(history).select(*keys).collect()
+    }
+
+    before = tables()
+    again = run_stock_pipeline(spark, str(landing), hist, pats, "2024", "01", "09")
+    assert again["history_rows"] == 6
+    assert tables() == before
+
+
 def test_derive_patterns_shapes(spark):
     rows = []
     # Bullish: 3 rising closes; volatility: (h-l)/l > 5%

@@ -1,9 +1,16 @@
 """MERGE/upsert semantics tests — S14/S15 (SURVEY.md §7.4: exact ON
 CONFLICT reproduction + idempotency)."""
 
+import pytest
 from pyspark.sql import functions as F
 
-from trading_dashboard_spark.io.writers import dedup_by_key, insert_if_absent, merge_upsert
+from trading_dashboard_spark.io.writers import (
+    append_if_absent,
+    dedup_by_key,
+    insert_if_absent,
+    merge_upsert,
+    merge_upsert_partitioned,
+)
 
 
 def _digest(df):
@@ -167,14 +174,12 @@ def test_merge_upsert_partitioned_rewrites_only_touched(spark, tmp_path):
     """Dynamic-partition-overwrite merge: updates touching one date (plus
     a brand-new date) leave every other partition's files untouched on
     disk, results equal a full-table merge, and re-running the same merge
-    is a no-op (idempotency)."""
+    is a no-op (idempotency). The overwrite mode is a per-write option:
+    the session's conf reads the same before and after."""
     import os
 
-    from trading_dashboard_spark.io.writers import (
-        merge_upsert,
-        merge_upsert_partitioned,
-    )
-
+    conf = "spark.sql.sources.partitionOverwriteMode"
+    session_mode = spark.conf.get(conf)
     path = str(tmp_path / "part_tbl")
     base = spark.createDataFrame(
         [("A", "2024-01-01", 1.0), ("B", "2024-01-01", 2.0),
@@ -201,6 +206,7 @@ def test_merge_upsert_partitioned_rewrites_only_touched(spark, tmp_path):
         ["sym", "d", "v"],
     )
     merge_upsert_partitioned(spark, updates, path, keys=["sym", "d"], partition_col="d")
+    assert spark.conf.get(conf) == session_mode
 
     # untouched partitions: identical files, same mtimes
     assert files("2024-01-01") == before_d1
@@ -219,22 +225,27 @@ def test_merge_upsert_partitioned_rewrites_only_touched(spark, tmp_path):
     assert again == expected
 
 
-def test_merge_upsert_partitioned_raises_on_corrupt_target(spark, tmp_path):
+@pytest.mark.parametrize(
+    "commit",
+    [
+        lambda spark, rows, path: merge_upsert_partitioned(
+            spark, rows, path, keys=["sym", "d"], partition_col="d"
+        ),
+        lambda spark, rows, path: append_if_absent(spark, rows, path, keys=["sym", "d"]),
+    ],
+    ids=["merge_upsert_partitioned", "append_if_absent"],
+)
+def test_merge_upsert_partitioned_raises_on_corrupt_target(spark, tmp_path, commit):
     """A read failure on an EXISTING table must propagate, not silently
-    fall back to treating the merge as a first write (which would
-    dynamic-overwrite touched partitions with only the update rows)."""
-    import pytest
-
-    from trading_dashboard_spark.io.writers import merge_upsert_partitioned
-
+    fall back to treating the commit as a first write (which would
+    dynamic-overwrite touched partitions with only the update rows, or
+    append beside a table that cannot be read)."""
     path = tmp_path / "corrupt_tbl"
     (path / "d=2024-01-01").mkdir(parents=True)
     (path / "d=2024-01-01" / "part-0.parquet").write_bytes(b"not a parquet file")
     updates = spark.createDataFrame([("A", "2024-01-01", 1.0)], ["sym", "d", "v"])
-    with pytest.raises(Exception) as ei:
-        merge_upsert_partitioned(
-            spark, updates, str(path), keys=["sym", "d"], partition_col="d"
-        )
+    with pytest.raises(Exception):
+        commit(spark, updates, str(path))
     # the corruption surfaced; nothing overwrote the existing partition
     assert (path / "d=2024-01-01" / "part-0.parquet").read_bytes() == b"not a parquet file"
 

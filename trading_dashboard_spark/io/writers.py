@@ -9,35 +9,45 @@ The reference's write modes (SURVEY.md §2.1):
 
 On Spark, S12/S13 are `mode("overwrite")`; S16 is `partitionBy` (Catalyst
 partition pruning replaces Postgres partition routing); S14/S15 are
-implemented as pure-DataFrame set algebra because Delta is not on the
-classpath in this deployment — the facade keeps the call sites stable so a
-Delta `MERGE INTO` can be swapped in when available (import-gated).
+pure-DataFrame set algebra on the natural key. Two table-level writers
+commit them to parquet: `merge_upsert_partitioned` rewrites only the
+partitions an upsert touches (dynamic partition overwrite), and
+`append_if_absent` appends only the absent keys, never rewriting the table.
+Both treat a missing table, and only a missing table, as the first write.
 
 Scale notes (100 TB): merge_upsert shuffles both sides once on the natural
 key; with the target bucketed/partitioned on the same key the target-side
-shuffle disappears. The rewritten-partition pattern (overwrite only the
-partitions present in `updates`, via dynamic partition overwrite) bounds the
-rewrite to the touched partitions rather than the whole table.
+shuffle disappears.
 """
 
 from __future__ import annotations
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, functions as F
 
-
-def _delta_available(spark) -> bool:
-    try:  # pragma: no cover - environment-dependent
-        spark._jvm.io.delta.tables.DeltaTable  # noqa: B018
-        return True
-    except Exception:
-        return False
+# The conditions Spark raises when a parquet path holds no table yet.
+_MISSING_TABLE = {"PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"}
 
 
-def write_partitioned(
-    df: DataFrame, path: str, partition_cols: list[str], mode: str = "overwrite"
-) -> None:
+def _read_existing(spark, path: str) -> DataFrame | None:
+    """The parquet table at `path`, or None when there is none yet.
+
+    Only a missing table means first write. Any other read failure
+    (permissions, corrupt footers, transient FS errors) on an EXISTING
+    table propagates: treating it as a first write would replace the
+    table's rows with just the new ones.
+    """
+    try:
+        return spark.read.parquet(path)
+    except AnalysisException as e:
+        if e.getCondition() not in _MISSING_TABLE:
+            raise
+        return None
+
+
+def write_partitioned(df: DataFrame, path: str, partition_cols: list[str]) -> None:
     """S16 — year/date-partitioned layout; pruning becomes automatic."""
-    df.write.mode(mode).partitionBy(*partition_cols).parquet(path)
+    df.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
 
 
 def write_overwrite(df: DataFrame, path: str) -> None:
@@ -93,32 +103,21 @@ def merge_upsert_partitioned(
     batch), merged, then locally checkpointed before the overwrite so the
     write never scans the files it is replacing.
     """
-    from pyspark.errors import AnalysisException
-
     vals = [r[0] for r in updates.select(partition_col).distinct().collect()]
     updates = dedup_by_key(updates, keys)
-    try:
-        target = spark.read.parquet(path)
+    target = _read_existing(spark, path)
+    if target is None:
+        merged = updates
+    else:
         affected = target.filter(F.col(partition_col).isin(vals))
         merged = merge_upsert(affected, updates, keys).select(*target.columns)
-    except AnalysisException as e:
-        # ONLY the missing-table case means first write. Any other read
-        # failure (permissions, corrupt footers, transient FS errors) on
-        # an EXISTING table must propagate: falling back to
-        # `merged = updates` would dynamic-overwrite every touched
-        # partition with just the update rows, silently dropping the
-        # pre-existing rows in them.
-        if "PATH_NOT_FOUND" not in str(e) and "UNABLE_TO_INFER_SCHEMA" not in str(e):
-            raise
-        merged = updates
-    merged = merged.localCheckpoint(eager=True)
-    conf = "spark.sql.sources.partitionOverwriteMode"
-    prev = spark.conf.get(conf, "static")
-    spark.conf.set(conf, "dynamic")
-    try:
-        merged.write.mode("overwrite").partitionBy(partition_col).parquet(path)
-    finally:
-        spark.conf.set(conf, prev)
+    (
+        merged.localCheckpoint(eager=True)
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(partition_col)
+        .parquet(path)
+    )
 
 
 def insert_if_absent(target: DataFrame, new_rows: DataFrame, keys: list[str]) -> DataFrame:
@@ -126,6 +125,17 @@ def insert_if_absent(target: DataFrame, new_rows: DataFrame, keys: list[str]) ->
     new_rows = dedup_by_key(new_rows, keys)
     additions = new_rows.join(target.select(*keys), on=keys, how="left_anti")
     return target.unionByName(additions.select(*target.columns))
+
+
+def append_if_absent(spark, rows: DataFrame, path: str, keys: list[str]) -> None:
+    """S15 at table scale: ``ON CONFLICT (keys) DO NOTHING`` into a parquet
+    table by appending only the rows whose keys it lacks. Existing files
+    are never rewritten, so re-running the same rows appends nothing."""
+    rows = dedup_by_key(rows, keys)
+    target = _read_existing(spark, path)
+    if target is not None:
+        rows = rows.join(target.select(*keys), on=keys, how="left_anti").select(*target.columns)
+    rows.write.mode("append").parquet(path)
 
 
 def dedup_by_key(df: DataFrame, keys: list[str]) -> DataFrame:

@@ -8,7 +8,10 @@ whole pipeline and prunes/pushes across what used to be process boundaries.
 
 Write layout mirrors create_partitions.py:16-25: history partitioned by
 ``year(trade_date)`` so partition pruning replaces Postgres partition
-routing (S16).
+routing (S16). Both tables commit through ``io.writers``: history through
+``merge_upsert_partitioned`` (S14, rewrites only the landed day's year
+partition) and patterns through ``append_if_absent`` (S15, appends only new
+keys).
 """
 
 from __future__ import annotations
@@ -16,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..io.readers import read_quote_landing
-from ..io.writers import insert_if_absent, merge_upsert, write_partitioned
+from ..io.writers import append_if_absent, merge_upsert_partitioned
 from ..operators.patterns import detect_ma_cross, detect_trends, detect_volatility
 from ..operators.windows import per_key_window, prev_available
 
@@ -93,32 +96,16 @@ def run_stock_pipeline(
             F.broadcast(dim.select("symbol", "rank", "name", "country")), "symbol", "left"
         ).withColumnsRenamed({"rank": "market_cap_rank", "name": "company_name"})
 
-    try:
-        history = spark.read.parquet(history_path)
-        merged = merge_upsert(history, staging.select(*history.columns), ["symbol", "trade_date"])
-    except Exception:  # first run — no history yet
-        merged = staging
-    merged = merged.withColumn("year", F.year("trade_date"))
-    write_partitioned(merged, history_path + ".tmp", ["year"])
-    # swap via overwrite (atomic enough for local; table format would commit)
-    spark.read.parquet(history_path + ".tmp").write.mode("overwrite").partitionBy(
-        "year"
-    ).parquet(history_path)
+    staging = staging.withColumn("year", F.year("trade_date"))
+    merge_upsert_partitioned(spark, staging, history_path, ["symbol", "trade_date"], "year")
 
     history = spark.read.parquet(history_path)
-    new_patterns = derive_patterns(history)
-    try:
-        existing = spark.read.parquet(patterns_path)
-        patterns = insert_if_absent(
-            existing, new_patterns, ["symbol", "trade_date", "pattern"]
-        )
-    except Exception:
-        patterns = new_patterns
-    patterns.write.mode("overwrite").parquet(patterns_path + ".tmp")
-    spark.read.parquet(patterns_path + ".tmp").write.mode("overwrite").parquet(patterns_path)
+    append_if_absent(
+        spark, derive_patterns(history), patterns_path, ["symbol", "trade_date", "pattern"]
+    )
 
     return {
         "staging_rows": staging.count(),
-        "history_rows": spark.read.parquet(history_path).count(),
+        "history_rows": history.count(),
         "pattern_rows": spark.read.parquet(patterns_path).count(),
     }
