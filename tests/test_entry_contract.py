@@ -5,6 +5,19 @@ SQL-expressible queries."""
 import pytest
 
 import __spark_entry__ as contract
+from trading_dashboard_spark import queries_relational
+from trading_dashboard_spark.query_registry import QUERY_REGISTRY
+from trading_dashboard_spark.session import RUNTIME_CONFS, get_spark
+
+#: Settings a session built elsewhere may carry, each of which breaks a
+#: registry query: another time zone shifts the daily bars, ANSI raises
+#: where the queries expect NULL, and NTZ inference types testdata
+#: timestamps as TIMESTAMP_NTZ.
+FOREIGN_CONFS = {
+    "spark.sql.session.timeZone": "America/Los_Angeles",
+    "spark.sql.ansi.enabled": "true",
+    "spark.sql.parquet.inferTimestampNTZ.enabled": "true",
+}
 
 
 def test_entry_returns_rows(spark):
@@ -12,6 +25,39 @@ def test_entry_returns_rows(spark):
     rows = df.collect()
     assert len(rows) > 0
     assert {"user_id", "pct_change"} <= set(df.columns)
+
+
+def test_adapter_sets_runtime_confs_on_a_foreign_session(spark, sf_dir):
+    """A contract caller brings its own session; `entry` and the adapter's
+    query functions set the runtime confs on it, while the registry keeps
+    the bare function for callers whose session comes from `get_spark`."""
+    assert QUERY_REGISTRY["top_gainers"].fn is queries_relational.top_gainers
+
+    def foreign():
+        other = spark.newSession()
+        for k, v in FOREIGN_CONFS.items():
+            other.conf.set(k, v)
+        return other
+
+    got = contract.queries()["top_gainers"](foreign(), sf_dir).collect()
+    want = queries_relational.top_gainers(spark, sf_dir).collect()
+    assert got and got == want
+    assert contract.entry(foreign()).collect() == want
+
+
+def test_get_spark_sets_runtime_confs_on_an_existing_session(spark):
+    """`get_spark` sets RUNTIME_CONFS through its builder alone: on a live
+    session `getOrCreate` applies the builder's modifiable confs again."""
+    shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    try:
+        for k, v in FOREIGN_CONFS.items():
+            spark.conf.set(k, v)
+        again = get_spark("tests", shuffle_partitions=shuffle)
+        assert again is spark
+        assert {k: spark.conf.get(k) for k in RUNTIME_CONFS} == RUNTIME_CONFS
+    finally:
+        for k, v in RUNTIME_CONFS.items():
+            spark.conf.set(k, v)
 
 
 def test_registry_shape():

@@ -1,4 +1,4 @@
-from .readers import Catalog, load_table, load_tables  # noqa: F401
+from .readers import load_table  # noqa: F401
 from .writers import (  # noqa: F401
     insert_if_absent,
     merge_upsert,

@@ -72,8 +72,7 @@ def export_jdbc(
     the target database); ``batch_size`` sets the JDBC batch INSERT size,
     replacing the reference's one-row-per-execute loops.
     """
-    if df.rdd.getNumPartitions() > max_connections:
-        df = df.coalesce(max_connections)
+    df = df.coalesce(max_connections)
     opts = {"batchsize": str(batch_size), **(options or {})}
     try:
         df.write.mode(mode).options(**opts).jdbc(url=url, table=table)

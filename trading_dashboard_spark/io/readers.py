@@ -17,7 +17,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F, types as T
 
 from ..schemas import RAW_QUOTE, TESTDATA_SCHEMAS
-from ..session import apply_runtime_confs
 from .cache import VersionCache, file_version
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -48,9 +47,8 @@ def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> 
     drops read directly as session-tz TIMESTAMP because the session pins
     UTC and disables NTZ inference
     (``spark.sql.parquet.inferTimestampNTZ.enabled=false`` — see
-    session.RUNTIME_CONFS).
+    session.RUNTIME_CONFS, which ``get_spark`` sets).
     """
-    apply_runtime_confs(spark)
     path = table_path(name, sf_dir)
     return _SCANS.get_or_compute(
         spark, file_version(path), lambda: _scan(spark, name, path)
@@ -72,12 +70,6 @@ def _scan(spark: SparkSession, name: str, path: str) -> DataFrame:
                     F.timestamp_micros(F.expr(f"`{field.name}` div 1000")),
                 )
     return df
-
-
-def load_tables(
-    spark: SparkSession, names: list[str], sf_dir: str = DEFAULT_SF_DIR
-) -> dict[str, DataFrame]:
-    return {n: load_table(spark, n, sf_dir) for n in names}
 
 
 def spread(df: DataFrame, *cols: str, factor: int = 1) -> DataFrame:
@@ -123,31 +115,6 @@ def _estimated_width(df: DataFrame) -> int:
         return max(1, size // max(1, max_split))
     except Exception:
         return df.rdd.getNumPartitions()
-
-
-class Catalog:
-    """Lazy table catalog bound to one scale-factor directory.
-
-    ``cat.events`` / ``cat["lineitem"]`` return fresh DataFrames; Spark
-    caches file listings + schema, so repeated access is cheap.
-    """
-
-    def __init__(self, spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR):
-        self.spark = spark
-        self.sf_dir = sf_dir
-
-    def __getitem__(self, name: str) -> DataFrame:
-        return load_table(self.spark, name, self.sf_dir)
-
-    def __getattr__(self, name: str) -> DataFrame:
-        if name in TESTDATA_SCHEMAS:
-            return self[name]
-        raise AttributeError(name)
-
-    def register_all(self) -> None:
-        """Register every testdata table as a temp view for SQL entry points."""
-        for name in TESTDATA_SCHEMAS:
-            self[name].createOrReplaceTempView(name)
 
 
 def read_quote_landing(

@@ -5,6 +5,8 @@ enrich → staging normalize → window-merge into year-partitioned history →
 pattern detection. Each Airflow task boundary (process fork + GCS/Postgres
 round-trip) collapses into a stage of a single lazy plan; Catalyst sees the
 whole pipeline and prunes/pushes across what used to be process boundaries.
+The reference's company enrichment (rank, name, country) is not applied:
+history keeps the landed quote columns.
 
 Write layout mirrors create_partitions.py:16-25: history partitioned by
 ``year(trade_date)`` so partition pruning replaces Postgres partition
@@ -81,7 +83,6 @@ def run_stock_pipeline(
     y: str,
     m: str,
     d: str,
-    dim: DataFrame | None = None,
 ) -> dict[str, int]:
     """One daily increment, end to end (idempotent — re-running the same
     (y, m, d) leaves both tables unchanged, like the ON CONFLICT keys).
@@ -90,13 +91,7 @@ def run_stock_pipeline(
     (the reference's runtime row-count checks, full_stock_pipeline.py:356-362).
     """
     raw = read_quote_landing(spark, landing_dir, y, m, d)
-    staging = normalize_staging(raw)
-    if dim is not None:
-        staging = staging.join(
-            F.broadcast(dim.select("symbol", "rank", "name", "country")), "symbol", "left"
-        ).withColumnsRenamed({"rank": "market_cap_rank", "name": "company_name"})
-
-    staging = staging.withColumn("year", F.year("trade_date"))
+    staging = normalize_staging(raw).withColumn("year", F.year("trade_date"))
     merge_upsert_partitioned(spark, staging, history_path, ["symbol", "trade_date"], "year")
 
     history = spark.read.parquet(history_path)

@@ -11,61 +11,31 @@ loader by name, each with a DuckDB oracle.
 
 from pyspark.sql import Window as W, functions as F
 
-from .query_registry import DAILY_SQL, _daily_close, _t, pround, register
+from .query_registry import (
+    DAILY_SQL,
+    LATEST_CLOSE_SQL,
+    _daily_close,
+    _latest_close,
+    _latest_movers,
+    _t,
+    latest_movers_sql,
+    pround,
+    register,
+)
 
 _WIN = "PARTITION BY user_id ORDER BY d"
 
 
 @register(
     "top_losers",
-    f"""
-    WITH {DAILY_SQL},
-    seq AS (
-      SELECT user_id, d, close,
-             lag(close) OVER ({_WIN}) AS prev_close,
-             row_number() OVER (PARTITION BY user_id ORDER BY d DESC) AS rn
-      FROM daily
-    )
-    SELECT s.user_id, c.c_name,
-           strftime(s.d, '%Y-%m-%d') AS trade_date,
-           round(s.close, 2) AS close,
-           round(s.prev_close, 2) AS prev_close,
-           round((s.close - s.prev_close) / s.prev_close * 100, 4) AS pct_change
-    FROM seq s JOIN customer c ON s.user_id = c.c_custkey
-    WHERE s.rn = 1 AND s.prev_close IS NOT NULL AND s.prev_close <> 0
-    ORDER BY pct_change ASC, s.user_id
-    LIMIT 10
-    """,
+    latest_movers_sql(descending=False),
     tags=("dashboard", "J1", "J4", "W1", "O3", "P18"),
 )
 def top_losers(spark, sf_dir):
     """`load_top_losers` (data_loader.py:157-180) — the ASC twin of the
     flagship top-gainers query: window lag (W1) + latest-per-key (J4) +
     broadcast dim join (J1) + pct-change (P18) + bottom-k (O3)."""
-    from .operators import latest_per_key
-    from .operators.relational import pct_change_expr
-
-    daily = _daily_close(spark, sf_dir).select("user_id", "d", "close")
-    w = W.partitionBy("user_id").orderBy("d")
-    seq = daily.withColumn("prev_close", F.lag("close").over(w))
-    latest = latest_per_key(seq, ["user_id"], "d")
-    cust = _t(spark, sf_dir, "customer")
-    return (
-        latest.filter(F.col("prev_close").isNotNull() & (F.col("prev_close") != 0))
-        .join(F.broadcast(cust), F.col("user_id") == F.col("c_custkey"))
-        .select(
-            "user_id",
-            "c_name",
-            F.date_format("d", "yyyy-MM-dd").alias("trade_date"),
-            pround("close", 2).alias("close"),
-            pround("prev_close", 2).alias("prev_close"),
-            pround(pct_change_expr(F.col("close"), F.col("prev_close")), 4).alias(
-                "pct_change"
-            ),
-        )
-        .orderBy(F.col("pct_change").asc(), "user_id")
-        .limit(10)
-    )
+    return _latest_movers(spark, sf_dir, descending=False)
 
 
 @register(
@@ -112,19 +82,13 @@ def high_volatility_top10(spark, sf_dir):
 @register(
     "latest_prediction_per_symbol",
     f"""
-    WITH {DAILY_SQL},
-    seq AS (
-      SELECT user_id, d, close,
-             lag(close) OVER ({_WIN}) AS prev_close,
-             row_number() OVER (PARTITION BY user_id ORDER BY d DESC) AS rn
-      FROM daily
-    )
+    WITH {DAILY_SQL}, {LATEST_CLOSE_SQL}
     SELECT user_id,
            strftime(d + INTERVAL 1 DAY, '%Y-%m-%d') AS trade_date,
            round(close, 2) AS previous_closing_price,
            round(2 * close - prev_close, 2) AS predicted_closing_price
-    FROM seq
-    WHERE rn = 1 AND prev_close IS NOT NULL
+    FROM latest_close
+    WHERE prev_close IS NOT NULL
     """,
     tags=("dashboard", "O4", "W1", "F9"),
 )
@@ -136,12 +100,7 @@ def latest_prediction_per_symbol(spark, sf_dir):
     the reference's predictor (analyze_news_stock_patterns.py:217); the
     full two-stage-regression serving path lives in
     ``ml_next_day_prediction`` (ml/predictor.py)."""
-    from .operators import latest_per_key
-
-    daily = _daily_close(spark, sf_dir).select("user_id", "d", "close")
-    w = W.partitionBy("user_id").orderBy("d")
-    seq = daily.withColumn("prev_close", F.lag("close").over(w))
-    latest = latest_per_key(seq, ["user_id"], "d")
+    latest = _latest_close(spark, sf_dir)
     return latest.filter(F.col("prev_close").isNotNull()).select(
         "user_id",
         F.date_format(F.date_add("d", 1), "yyyy-MM-dd").alias("trade_date"),

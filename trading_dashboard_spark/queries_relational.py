@@ -4,7 +4,7 @@ aggregations, sorts/limits, set ops, scalar functions (SURVEY.md §2.1-2.4,
 
 from pyspark.sql import Window as W, functions as F
 
-from .query_registry import DAILY_SQL, _daily_close, _t, pround, register
+from .query_registry import _latest_movers, _t, latest_movers_sql, pround, register
 
 
 
@@ -50,24 +50,7 @@ def pricing_summary(spark, sf_dir):
 
 @register(
     "top_gainers",
-    f"""
-    WITH {DAILY_SQL},
-    seq AS (
-      SELECT user_id, d, close,
-             lag(close) OVER (PARTITION BY user_id ORDER BY d) AS prev_close,
-             row_number() OVER (PARTITION BY user_id ORDER BY d DESC) AS rn
-      FROM daily
-    )
-    SELECT s.user_id, c.c_name,
-           strftime(s.d, '%Y-%m-%d') AS trade_date,
-           round(s.close, 2) AS close,
-           round(s.prev_close, 2) AS prev_close,
-           round((s.close - s.prev_close) / s.prev_close * 100, 4) AS pct_change
-    FROM seq s JOIN customer c ON s.user_id = c.c_custkey
-    WHERE s.rn = 1 AND s.prev_close IS NOT NULL AND s.prev_close <> 0
-    ORDER BY pct_change DESC, s.user_id
-    LIMIT 10
-    """,
+    latest_movers_sql(descending=True),
     tags=("flagship", "J1", "J4", "W1", "O3", "P18"),
 )
 def top_gainers(spark, sf_dir):
@@ -75,30 +58,7 @@ def top_gainers(spark, sf_dir):
     query (data_loader.py:131-154) over the events series — window lag
     (W1) + latest-per-key (J4 as row_number) + broadcast dim join (J1) +
     pct-change projection (P18/P17) + top-k (O3)."""
-    from .operators import latest_per_key
-    from .operators.relational import pct_change_expr
-
-    daily = _daily_close(spark, sf_dir).select("user_id", "d", "close")
-    w = W.partitionBy("user_id").orderBy("d")
-    seq = daily.withColumn("prev_close", F.lag("close").over(w))
-    latest = latest_per_key(seq, ["user_id"], "d")
-    cust = _t(spark, sf_dir, "customer")
-    return (
-        latest.filter(F.col("prev_close").isNotNull() & (F.col("prev_close") != 0))
-        .join(F.broadcast(cust), F.col("user_id") == F.col("c_custkey"))
-        .select(
-            "user_id",
-            "c_name",
-            F.date_format("d", "yyyy-MM-dd").alias("trade_date"),
-            pround("close", 2).alias("close"),
-            pround("prev_close", 2).alias("prev_close"),
-            pround(pct_change_expr(F.col("close"), F.col("prev_close")), 4).alias(
-                "pct_change"
-            ),
-        )
-        .orderBy(F.col("pct_change").desc(), "user_id")
-        .limit(10)
-    )
+    return _latest_movers(spark, sf_dir, descending=True)
 
 
 @register(

@@ -815,7 +815,8 @@ def streaming_minhash_admission(spark, sf_dir):
     everything previously admitted, and its admitted documents' band
     rows and shingle sets join the index before the next trigger (the
     composition of the r7 admission gate with the r6 versioned-sink
-    pattern; io/versioned.merge_stream is the durable-table analog).
+    pattern; io/versioned.incremental_merge_stream is the durable-table
+    analog).
     Unlike the static form, a wave-2 document near-duplicating a
     wave-0 ADMISSION is rejected here — the semantics a continuously
     ingesting corpus actually needs.

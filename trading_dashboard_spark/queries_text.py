@@ -4986,8 +4986,8 @@ def ngram_novelty_by_source(spark, sf_dir):
     (token-hash polynomial here, md5 window strings in the oracle);
     attribution equality holds absent intra-keyspace collisions — the
     same documented assumption as the banding-sweep Jaccard (ADVICE
-    r8 #4). Wrapping multiply requires non-ANSI arithmetic, which
-    `apply_runtime_confs` pins per query.
+    r8 #4). Wrapping multiply requires non-ANSI arithmetic:
+    ``spark.sql.ansi.enabled=false`` in session.RUNTIME_CONFS.
     """
     from .text.analysis import tokenize
 

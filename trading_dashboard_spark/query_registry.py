@@ -21,7 +21,6 @@ integration test of the public API.
 
 from __future__ import annotations
 
-import functools
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
@@ -30,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 from .functions import portable_round_sql, pround  # noqa: F401
 from .io.cache import VersionCache, file_version
 from .io.readers import load_table, table_path
-from .session import apply_runtime_confs
+from .operators.relational import latest_per_key, pct_change_expr
 
 
 @dataclass
@@ -46,21 +45,11 @@ QUERY_REGISTRY: dict[str, QuerySpec] = {}
 
 def register(name: str, oracle: str | None, tags: tuple[str, ...] = (), doc: str = ""):
     def deco(fn):
-        wrapped = _with_confs(fn)
         sql = portable_round_sql(oracle) if oracle else oracle
-        QUERY_REGISTRY[name] = QuerySpec(wrapped, sql, tags, doc or (fn.__doc__ or ""))
-        return wrapped
+        QUERY_REGISTRY[name] = QuerySpec(fn, sql, tags, doc or (fn.__doc__ or ""))
+        return fn
 
     return deco
-
-
-def _with_confs(fn):
-    @functools.wraps(fn)
-    def inner(spark: SparkSession, sf_dir: str, **kw) -> DataFrame:
-        apply_runtime_confs(spark)
-        return fn(spark, sf_dir, **kw)
-
-    return inner
 
 
 def _t(spark, sf_dir, name) -> DataFrame:
@@ -194,3 +183,66 @@ daily AS (
 )
 """
 
+
+def _latest_close(spark, sf_dir) -> DataFrame:
+    """Each user's latest daily bar (``user_id, d, close``) with the close
+    of the bar before it as ``prev_close`` — NULL on a user's first day:
+    window lag (W1) over `_daily_close`, then latest-per-key (J4)."""
+    daily = _daily_close(spark, sf_dir).select("user_id", "d", "close")
+    w = W.partitionBy("user_id").orderBy("d")
+    seq = daily.withColumn("prev_close", F.lag("close").over(w))
+    return latest_per_key(seq, ["user_id"], "d")
+
+
+#: DuckDB CTE equivalent of `_latest_close`; follows `DAILY_SQL`.
+LATEST_CLOSE_SQL = """
+latest_close AS (
+  SELECT user_id, d, close, prev_close FROM (
+    SELECT user_id, d, close,
+           lag(close) OVER (PARTITION BY user_id ORDER BY d) AS prev_close,
+           row_number() OVER (PARTITION BY user_id ORDER BY d DESC) AS rn
+    FROM daily
+  ) WHERE rn = 1
+)
+"""
+
+
+def _latest_movers(spark, sf_dir, descending: bool) -> DataFrame:
+    """The ten users whose latest close moved most from the one before,
+    by percent change — up when `descending`, down otherwise — joined to
+    their ``customer`` name (J1 broadcast, P18 pct-change, O3 top-k)."""
+    cust = _t(spark, sf_dir, "customer")
+    pct = F.col("pct_change")
+    return (
+        _latest_close(spark, sf_dir)
+        .filter(F.col("prev_close").isNotNull() & (F.col("prev_close") != 0))
+        .join(F.broadcast(cust), F.col("user_id") == F.col("c_custkey"))
+        .select(
+            "user_id",
+            "c_name",
+            F.date_format("d", "yyyy-MM-dd").alias("trade_date"),
+            pround("close", 2).alias("close"),
+            pround("prev_close", 2).alias("prev_close"),
+            pround(pct_change_expr(F.col("close"), F.col("prev_close")), 4).alias(
+                "pct_change"
+            ),
+        )
+        .orderBy(pct.desc() if descending else pct.asc(), "user_id")
+        .limit(10)
+    )
+
+
+def latest_movers_sql(descending: bool) -> str:
+    """DuckDB oracle of `_latest_movers`."""
+    return f"""
+    WITH {DAILY_SQL}, {LATEST_CLOSE_SQL}
+    SELECT s.user_id, c.c_name,
+           strftime(s.d, '%Y-%m-%d') AS trade_date,
+           round(s.close, 2) AS close,
+           round(s.prev_close, 2) AS prev_close,
+           round((s.close - s.prev_close) / s.prev_close * 100, 4) AS pct_change
+    FROM latest_close s JOIN customer c ON s.user_id = c.c_custkey
+    WHERE s.prev_close IS NOT NULL AND s.prev_close <> 0
+    ORDER BY pct_change {"DESC" if descending else "ASC"}, s.user_id
+    LIMIT 10
+    """

@@ -22,8 +22,9 @@ import os
 
 from pyspark.sql import SparkSession
 
-#: Runtime-mutable SQL confs every query should see, regardless of which
-#: session created the DataFrame (the verify driver owns its own session).
+#: Runtime-mutable SQL confs every query expects. :func:`get_spark` sets
+#: them through its builder; a session made elsewhere gets them from
+#: :func:`apply_runtime_confs` (``__spark_entry__`` does this).
 RUNTIME_CONFS: dict[str, str] = {
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.ansi.enabled": "false",
@@ -47,16 +48,11 @@ RUNTIME_CONFS: dict[str, str] = {
 
 
 def apply_runtime_confs(spark: SparkSession) -> SparkSession:
-    """Set runtime-mutable confs on an externally owned session.
-
-    Called at the top of every public query so behavior is identical
-    whether the session came from :func:`get_spark` or from the driver.
-    """
+    """Set :data:`RUNTIME_CONFS` on a session that :func:`get_spark` did not
+    build. A conf that cannot be set raises: running on without it would,
+    for one, read testdata timestamps as ``TIMESTAMP_NTZ``."""
     for k, v in RUNTIME_CONFS.items():
-        try:
-            spark.conf.set(k, v)
-        except Exception:
-            pass  # immutable in this deployment — defaults must suffice
+        spark.conf.set(k, v)
     return spark
 
 
@@ -93,6 +89,8 @@ def get_spark(
         builder = builder.config(k, v)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
+    # getOrCreate applies the builder's modifiable confs to an existing
+    # session too, so RUNTIME_CONFS hold on every session returned here
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    return apply_runtime_confs(spark)
+    return spark

@@ -37,9 +37,7 @@ def write_landing_json(
     """
     path = f"{landing_dir.rstrip('/')}/{y}/{m}/{d}/"
     day = df.filter(F.col("date") == f"{y}-{m}-{d}")
-    if day.rdd.getNumPartitions() > max_files:
-        day = day.coalesce(max_files)
-    day.write.mode("overwrite").json(path)
+    day.coalesce(max_files).write.mode("overwrite").json(path)
     return path
 
 

@@ -17,7 +17,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from ..schemas import EVENTS
-from ..session import apply_runtime_confs
 
 
 #: Footer-sniff budget for generation detection. A directory is one
@@ -99,7 +98,6 @@ def stream_events(
     """
     import os
 
-    apply_runtime_confs(spark)
     ts_int64 = _ts_is_int64(path)
     reader = spark.readStream.schema(_events_read_schema(ts_int64)).option(
         "maxFilesPerTrigger", str(max_files_per_trigger)
