@@ -14,6 +14,11 @@ from trading_dashboard_spark.pipelines.stock_pipeline import (
     normalize_staging,
     run_stock_pipeline,
 )
+from trading_dashboard_spark.sources import (
+    RateLimit,
+    fetch_quotes_distributed,
+    write_landing_json,
+)
 
 
 @pytest.fixture
@@ -98,6 +103,43 @@ def test_stock_pipeline_consecutive_days_accumulate(spark, tmp_path):
     again = run_stock_pipeline(spark, str(landing), hist, pats, "2024", "01", "09")
     assert again["history_rows"] == 6
     assert tables() == before
+
+
+def test_stock_pipeline_rerun_with_failed_fetch_keeps_history(spark, tmp_path):
+    """Re-running a day whose fetch failed for one symbol leaves that
+    symbol's history row as it was: the fetch's row of nulls is dropped in
+    staging instead of upserting NULL prices over a good close."""
+    symbols = spark.createDataFrame([("AAA",), ("BBB",)], ["symbol"])
+    landing = str(tmp_path / "landing")
+    hist, pats = str(tmp_path / "history"), str(tmp_path / "patterns")
+    rate = RateLimit(sleep_s=0.0, retry_sleep_s=0.0, max_retries=0)
+
+    def fetcher_failing_for(failing):
+        def fetch(symbol: str) -> dict:
+            if symbol == failing:
+                raise RuntimeError("simulated transport failure")
+            c = 10.0 if symbol == "AAA" else 20.0
+            return {"o": c, "h": c + 1, "l": c - 1, "c": c, "pc": c - 0.5,
+                    "d": 0.5, "dp": 5.0, "v": 100}
+
+        return fetch
+
+    def run_day(failing):
+        quotes = fetch_quotes_distributed(
+            symbols, fetcher_failing_for(failing), rate, date="2024-01-08"
+        )
+        write_landing_json(quotes, landing, "2024", "01", "08")
+        return run_stock_pipeline(spark, landing, hist, pats, "2024", "01", "08")
+
+    def closes():
+        return {r["symbol"]: r["closing_price"] for r in spark.read.parquet(hist).collect()}
+
+    first = run_day(failing=None)
+    assert closes() == {"AAA": 10.0, "BBB": 20.0}
+    again = run_day(failing="BBB")
+    assert again["staging_rows"] == 1
+    assert again["history_rows"] == first["history_rows"] == 2
+    assert closes() == {"AAA": 10.0, "BBB": 20.0}
 
 
 def test_derive_patterns_shapes(spark):

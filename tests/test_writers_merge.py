@@ -120,6 +120,74 @@ def test_versioned_commit_race_fails_cleanly(spark, tmp_path):
     assert commit_snapshot(df1, path) == 2
 
 
+def test_failed_commit_snapshot_releases_its_claim(spark, tmp_path):
+    """A single-table commit whose write fails leaves neither its claim
+    nor a partial snapshot directory, so a retry takes the same version
+    without vacuum and readers see the retry's rows."""
+    import os
+
+    from trading_dashboard_spark.io.versioned import (
+        commit_snapshot,
+        current_version,
+        read_versioned,
+    )
+
+    path = str(tmp_path / "vt_fail")
+    assert commit_snapshot(spark.createDataFrame([(1, "a")], ["k", "v"]), path) == 1
+    bad = spark.range(4).select(
+        F.col("id").alias("k"), F.raise_error(F.lit("simulated write failure")).alias("v")
+    )
+    with pytest.raises(Exception, match="simulated write failure"):
+        commit_snapshot(bad, path)
+    assert not os.path.exists(os.path.join(path, "v=2.claim"))
+    assert not os.path.exists(os.path.join(path, "v=2"))
+    assert current_version(path) == 1
+
+    retry = spark.createDataFrame([(1, "a2"), (2, "b")], ["k", "v"])
+    assert commit_snapshot(retry, path) == 2
+    assert {tuple(r) for r in read_versioned(spark, path).collect()} == {(1, "a2"), (2, "b")}
+
+
+def test_failed_multi_table_commit_removes_every_claimed_version(spark, tmp_path):
+    """When the second table's write fails, both tables lose this
+    transaction's claim and snapshot directory — the first table's
+    finished write and the second's partial one — and stay at v=1."""
+    import os
+
+    from trading_dashboard_spark.io.versioned import commit_multi, current_version
+
+    paths = [str(tmp_path / "a"), str(tmp_path / "b")]
+    good = spark.createDataFrame([(1, "a")], ["k", "v"])
+    assert commit_multi([(good, p, 0) for p in paths]) == {p: 1 for p in paths}
+    bad = spark.range(4).select(
+        F.col("id").alias("k"), F.raise_error(F.lit("simulated write failure")).alias("v")
+    )
+    with pytest.raises(Exception, match="simulated write failure"):
+        commit_multi([(good, paths[0], 1), (bad, paths[1], 1)])
+    for p in paths:
+        assert current_version(p) == 1
+        assert sorted(os.listdir(p)) == ["_VERSION", "v=1", "v=1.claim"]
+
+
+def test_unparseable_pointer_raises_instead_of_reading_as_empty(spark, tmp_path):
+    """Only a missing pointer means "no table yet": an empty `_VERSION`
+    makes current_version and vacuum raise, and vacuum deletes nothing."""
+    import os
+
+    from trading_dashboard_spark.io.versioned import commit_snapshot, current_version, vacuum
+
+    path = str(tmp_path / "vt_garbled")
+    df = spark.createDataFrame([(1, "a")], ["k", "v"])
+    commit_snapshot(df, path)
+    commit_snapshot(df, path)
+    open(os.path.join(path, "_VERSION"), "w").close()
+    with pytest.raises(ValueError):
+        current_version(path)
+    with pytest.raises(ValueError):
+        vacuum(path, grace_sec=0)
+    assert sorted(os.listdir(path)) == ["_VERSION", "v=1", "v=1.claim", "v=2", "v=2.claim"]
+
+
 def test_incremental_merge_stream_equals_batch_merge(spark, sf_dir, tmp_path):
     """foreachBatch merge over a multi-file stream (with planted duplicate
     keys across batches) converges to one row per key with the

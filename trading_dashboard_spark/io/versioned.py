@@ -24,8 +24,16 @@ raising :class:`ConcurrentCommitError` if another commit landed first
 (the read-modify-write conflict surfaces as a clean retryable failure
 instead of a silently lost update). Intended use is still a single
 merge-loop writer; the claims make a configuration mistake loud, safe and
-retryable rather than corrupting. Old versions remain for time travel
-until `vacuum`, which also clears committed/stale claims.
+retryable rather than corrupting. A commit that fails (a write error, a
+lost race) removes its own claims and partial directories before it
+raises, so the next commit can take the same version; only a process that
+dies mid-commit leaves a stale claim behind. Old versions remain for time
+travel until `vacuum`, which also clears committed and stale claims.
+
+There is one commit protocol, :func:`commit_multi` (claim → write →
+re-check → repoint); :func:`commit_snapshot` is its one-table case, and
+the merges (:func:`commit_merge`, :func:`commit_merge_multi`) compute
+their snapshots and commit through it.
 
 This is the engine's merge *target* abstraction: `commit_merge` is the
 streaming/batch S14 upsert applied transactionally. On a cluster the
@@ -36,10 +44,12 @@ through an if-absent put (object stores give both).
 from __future__ import annotations
 
 import os
+import shutil
+import time
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .writers import merge_upsert
+from .writers import dedup_by_key, merge_upsert
 
 _POINTER = "_VERSION"
 
@@ -54,11 +64,13 @@ def _pointer_path(path: str) -> str:
 
 
 def current_version(path: str) -> int:
-    """0 = table does not exist yet."""
+    """0 = table does not exist yet. Only a missing pointer means that: a
+    pointer that cannot be parsed raises, or `vacuum` would take every
+    snapshot for garbage."""
     try:
         with open(_pointer_path(path)) as fh:
             return int(fh.read().strip())
-    except (FileNotFoundError, ValueError):
+    except FileNotFoundError:
         return 0
 
 
@@ -74,48 +86,32 @@ def _claim_path(path: str, v: int) -> str:
     return os.path.join(path, f"v={v}.claim")
 
 
+def _write_pointer(path: str, v: int) -> None:
+    tmp = _pointer_path(path) + ".tmp"
+    with open(tmp, "w") as fh:
+        fh.write(str(v))
+    os.replace(tmp, _pointer_path(path))  # atomic on POSIX
+
+
 def commit_snapshot(df: DataFrame, path: str, expect_version: int | None = None) -> int:
-    """Write ``df`` as the next full snapshot and repoint. Returns the new
-    version. The data write completes before the pointer flips — crash in
-    between leaves the table at the old version (write is wasted, never
-    observed) plus a stale claim that `vacuum` clears.
+    """Write ``df`` as the next full snapshot and repoint: the one-table
+    case of :func:`commit_multi`. Returns the new version. The data write
+    completes before the pointer flips. A commit that fails removes its
+    claim and partial directory, so a retry can take the same version; a
+    process that dies in between leaves the table at the old version plus
+    a stale claim that `vacuum` clears.
 
     ``expect_version`` makes the commit compare-and-swap: it fails unless
     the pointer still reads that version. :func:`commit_merge` passes the
     snapshot version its merge was computed against, closing the
     read-merge-commit window — without it, a merge based on version N
-    could land as N+2 and silently drop N+1's changes (the claim files,
-    which are never removed until vacuum, enforce the version sequence in
+    could land as N+2 and silently drop N+1's changes (the claims of
+    committed versions, kept until vacuum, enforce the version sequence in
     between; the pointer re-check before repoint is the backstop).
 
     Raises :class:`ConcurrentCommitError` if the version claim or any
     pointer check loses a race (see module docstring)."""
-    os.makedirs(path, exist_ok=True)
-    base = current_version(path)
-    if expect_version is not None and base != expect_version:
-        raise ConcurrentCommitError(
-            f"{path} is at v={base}, but the commit was prepared against "
-            f"v={expect_version} — re-read and retry"
-        )
-    v = base + 1
-    try:
-        os.close(os.open(_claim_path(path, v), os.O_CREAT | os.O_EXCL | os.O_WRONLY))
-    except FileExistsError:
-        raise ConcurrentCommitError(
-            f"version {v} of {path} already claimed (concurrent committer, "
-            f"or a crashed commit — run vacuum to clear stale claims)"
-        ) from None
-    df.write.mode("overwrite").parquet(os.path.join(path, f"v={v}"))
-    if current_version(path) != base:
-        raise ConcurrentCommitError(
-            f"pointer of {path} moved past {base} during commit of v={v}; "
-            f"merge was based on a stale snapshot — retry"
-        )
-    tmp = _pointer_path(path) + ".tmp"
-    with open(tmp, "w") as fh:
-        fh.write(str(v))
-    os.replace(tmp, _pointer_path(path))  # atomic on POSIX
-    return v
+    return commit_multi([(df, path, expect_version)])[path]
 
 
 def commit_merge(
@@ -124,20 +120,12 @@ def commit_merge(
     """Transactional S14 upsert: merge ``updates`` into the current
     snapshot, commit as the next version. First commit bootstraps the
     table from the updates alone (deduplicated on the keys)."""
-    from .writers import dedup_by_key
-
-    base = current_version(path)
-    if base == 0:
-        return commit_snapshot(dedup_by_key(updates, keys), path, expect_version=0)
-    target = read_versioned(spark, path, version=base)
-    return commit_snapshot(
-        merge_upsert(target, updates, keys), path, expect_version=base
-    )
+    return commit_merge_multi(spark, {path: (updates, keys)})[path]
 
 
 def commit_multi(parts: list[tuple[DataFrame, str, int | None]]) -> dict[str, int]:
     """Commit full snapshots to SEVERAL versioned tables in one guarded
-    sequence — the multi-table form of :func:`commit_snapshot`.
+    sequence; :func:`commit_snapshot` is its one-table case.
 
     ``parts`` is ``[(df, path, expect_version), ...]``. Protocol:
 
@@ -147,9 +135,9 @@ def commit_multi(parts: list[tuple[DataFrame, str, int | None]]) -> dict[str, in
        committer aborts before a single byte of data lands;
     2. write every snapshot directory;
     3. re-check every pointer, then repoint all tables. A write failure
-       or a lost pointer race rolls back this transaction's directories
-       and claims (safe: we hold the claims) and raises
-       :class:`ConcurrentCommitError`.
+       or a lost pointer race removes the directory of every version
+       this transaction claimed, then its claims (safe: we hold the
+       claims), and raises.
 
     Guarantee (and its honest limit): per table, readers still never
     observe a partial snapshot, and no concurrent committer can
@@ -159,7 +147,7 @@ def commit_multi(parts: list[tuple[DataFrame, str, int | None]]) -> dict[str, in
     different transaction results (each still internally consistent).
     Closing that window needs a shared commit log / catalog — exactly
     what Delta/Iceberg add over bare parquet; swap this module for one
-    of them when the deployment has the jars (module docstring).
+    of them when the deployment has the jars.
 
     Returns {path: new_version}.
     """
@@ -167,29 +155,15 @@ def commit_multi(parts: list[tuple[DataFrame, str, int | None]]) -> dict[str, in
     seen = [p for _, p, _ in ordered]
     if len(set(seen)) != len(seen):
         raise ValueError(f"duplicate table paths in one transaction: {seen}")
-    claimed: list[tuple[str, int]] = []
-    written: list[tuple[str, int]] = []
-
-    def _abort() -> None:
-        import shutil
-
-        for path, v in written:
-            shutil.rmtree(os.path.join(path, f"v={v}"), ignore_errors=True)
-        for path, v in claimed:
-            try:
-                os.remove(_claim_path(path, v))
-            except OSError:
-                pass
-
-    new_versions: dict[str, int] = {}
+    claimed: dict[str, int] = {}
     try:
         for _df, path, expect in ordered:
             os.makedirs(path, exist_ok=True)
             base = current_version(path)
             if expect is not None and base != expect:
                 raise ConcurrentCommitError(
-                    f"{path} is at v={base}, commit prepared against "
-                    f"v={expect} — re-read and retry"
+                    f"{path} is at v={base}, but the commit was prepared "
+                    f"against v={expect} — re-read and retry"
                 )
             v = base + 1
             try:
@@ -198,30 +172,30 @@ def commit_multi(parts: list[tuple[DataFrame, str, int | None]]) -> dict[str, in
                 ))
             except FileExistsError:
                 raise ConcurrentCommitError(
-                    f"version {v} of {path} already claimed"
+                    f"version {v} of {path} already claimed (concurrent "
+                    f"committer, or a crashed commit — run vacuum to clear "
+                    f"stale claims)"
                 ) from None
-            claimed.append((path, v))
-            new_versions[path] = v
+            claimed[path] = v
         for df, path, _expect in ordered:
-            v = new_versions[path]
-            df.write.mode("overwrite").parquet(os.path.join(path, f"v={v}"))
-            written.append((path, v))
-        for _df, path, _expect in ordered:
-            if current_version(path) != new_versions[path] - 1:
+            df.write.mode("overwrite").parquet(os.path.join(path, f"v={claimed[path]}"))
+        for path, v in claimed.items():
+            if current_version(path) != v - 1:
                 raise ConcurrentCommitError(
-                    f"pointer of {path} moved during multi-table commit — "
-                    f"transaction rolled back, retry"
+                    f"pointer of {path} moved past {v - 1} during the commit "
+                    f"of v={v}; the commit was based on a stale snapshot — retry"
                 )
     except BaseException:
-        _abort()
+        for path, v in claimed.items():
+            shutil.rmtree(os.path.join(path, f"v={v}"), ignore_errors=True)
+            try:
+                os.remove(_claim_path(path, v))
+            except OSError:
+                pass
         raise
-    for _df, path, _expect in ordered:
-        v = new_versions[path]
-        tmp = _pointer_path(path) + ".tmp"
-        with open(tmp, "w") as fh:
-            fh.write(str(v))
-        os.replace(tmp, _pointer_path(path))
-    return new_versions
+    for path, v in claimed.items():
+        _write_pointer(path, v)
+    return claimed
 
 
 def commit_merge_multi(
@@ -229,12 +203,11 @@ def commit_merge_multi(
 ) -> dict[str, int]:
     """Transactional S14 upsert across several tables in one guarded
     sequence: ``updates`` maps table path -> (updates_df, merge keys).
-    Each table's merge is computed against its current snapshot and the
+    Each table's merge is computed against its current snapshot (a new
+    table bootstraps from its updates, deduplicated on the keys) and the
     whole set commits through :func:`commit_multi` with per-table
     compare-and-swap — any concurrent commit on ANY involved table
     aborts the whole transaction before visibility (retryable)."""
-    from .writers import dedup_by_key
-
     parts: list[tuple[DataFrame, str, int | None]] = []
     for path, (upd, keys) in updates.items():
         base = current_version(path)
@@ -259,9 +232,6 @@ def vacuum(path: str, keep: int = 1, grace_sec: float = 3600.0) -> list[int]:
     break every reader. The default one-hour grace covers any realistic
     snapshot write; pass ``grace_sec=0`` only when no committer can be
     running (e.g. single-process maintenance windows)."""
-    import shutil
-    import time
-
     cur = current_version(path)
     removed = []
     now = time.time()

@@ -29,7 +29,12 @@ from ..operators.windows import per_key_window, prev_available
 def normalize_staging(raw: DataFrame) -> DataFrame:
     """Staging normalization (full_stock_pipeline.py:282-336): rename to
     history schema, cast, fill defaults (d/dp/v → 0, :300-311), derive
-    previous close per symbol via window shift (:327)."""
+    previous close per symbol via window shift (:327).
+
+    A row without a close is a failed fetch (``fetch_quotes_distributed``
+    keeps it as a row of nulls) and is dropped: the reference lands a
+    symbol's JSON only after a successful fetch (:105-111), and letting it
+    through would upsert NULL prices over a day already in history."""
     df = (
         raw.select(
             F.col("symbol"),
@@ -42,7 +47,7 @@ def normalize_staging(raw: DataFrame) -> DataFrame:
             F.col("v").cast("long").alias("traded_volume"),
         )
         .na.fill({"traded_volume": 0})
-        .na.drop(subset=["symbol", "trade_date"])
+        .na.drop(subset=["symbol", "trade_date", "closing_price"])
     )
     w = per_key_window("symbol", "trade_date")
     # previous close: last available close before this row, feed value as
