@@ -68,6 +68,32 @@ def test_top_k_and_per_key(spark):
     assert got == {("A", 4.0), ("A", 3.0), ("B", 0.0), ("B", -1.0)}
 
 
+def test_read_companies_csv_cleans_money_and_filters_symbols(spark, tmp_path):
+    """S4 dimension ingest: money strings lose ``$`` and ``,`` before the
+    cast; empty, dotted and lower-case tickers are dropped."""
+    from trading_dashboard_spark.io.readers import read_companies_csv
+
+    path = tmp_path / "companies.csv"
+    path.write_text(
+        "Rank,Name,Symbol,Market Cap,Price USD,Country\n"
+        '1,Apple,AAPL,"$3,000,000,000",$189.50,United States\n'
+        '2,No Ticker,,"$1,000",$1.00,United States\n'
+        '3,Berkshire,BRK.B,"$900,000,000",$410.00,United States\n'
+        '4,Lower,msft,"$2,000,000,000",$400.00,United States\n'
+    )
+    rows = read_companies_csv(spark, str(path)).collect()
+    assert [r.asDict() for r in rows] == [
+        {
+            "rank": 1,
+            "name": "Apple",
+            "symbol": "AAPL",
+            "market_cap": 3.0e9,
+            "price_usd": 189.5,
+            "country": "United States",
+        }
+    ]
+
+
 def test_portable_round_sql_edge_cases():
     """Single-arg round passes through, quoted 'round(' is untouched,
     non-literal digit counts raise with the offending snippet."""

@@ -157,95 +157,6 @@ def test_export_jdbc_missing_driver_is_clear(spark):
     assert "driver" in str(ei.value).lower()
 
 
-def test_rest_quotes_python_datasource(spark):
-    """Spark 4 Python DataSource form of S1: format("rest_quotes") with
-    the synthetic transport returns one deterministic RAW_QUOTE row per
-    symbol, split across the requested partitions; option validation
-    fails fast."""
-    import pytest
-
-    from trading_dashboard_spark.schemas import RAW_QUOTE
-    from trading_dashboard_spark.sources.datasource import (
-        QuoteRestDataSource,
-        synthetic_quote,
-    )
-
-    spark.dataSource.register(QuoteRestDataSource)
-    df = (
-        spark.read.format("rest_quotes")
-        .option("symbols", "AAPL, MSFT,GOOG,AMZN,NVDA")
-        .option("partitions", "3")
-        .option("date", "2024-02-01")
-        .load()
-    )
-    assert df.schema == RAW_QUOTE
-    assert df.rdd.getNumPartitions() == 3
-    rows = {r["symbol"]: r for r in df.collect()}
-    assert sorted(rows) == ["AAPL", "AMZN", "GOOG", "MSFT", "NVDA"]
-    want = synthetic_quote("MSFT", "2024-02-01")
-    got = rows["MSFT"]
-    assert got["c"] == want["c"] and got["v"] == want["v"]
-    assert got["h"] >= max(got["o"], got["c"])  # candle invariant
-    # second read is identical (deterministic transport)
-    again = {r["symbol"]: r["c"] for r in (
-        spark.read.format("rest_quotes")
-        .option("symbols", "AAPL, MSFT,GOOG,AMZN,NVDA")
-        .option("partitions", "3")
-        .option("date", "2024-02-01")
-        .load().collect()
-    )}
-    assert again == {s: r["c"] for s, r in rows.items()}
-
-    with pytest.raises(Exception, match="symbols"):
-        spark.read.format("rest_quotes").load().collect()
-    with pytest.raises(Exception, match="endpoint"):
-        (spark.read.format("rest_quotes")
-         .option("symbols", "A").option("transport", "http").load().collect())
-
-
-def test_webhook_alert_sink_commit_protocol(spark, tmp_path):
-    """Writer-side Python DataSource: per-partition JSON-lines batches
-    ride back through WriterCommitMessage and the DRIVER materializes
-    them atomically at commit() — exactly-once for the capture
-    transport (task retries never reach the file), with a commit marker
-    carrying the total row count."""
-    import json
-
-    from trading_dashboard_spark.sources.datasource import (
-        AlertWebhookDataSource,
-    )
-
-    spark.dataSource.register(AlertWebhookDataSource)
-    df = spark.range(0, 250).selectExpr("id", "id * 2 AS v")
-    path = str(tmp_path / "alerts.jsonl")
-    (
-        df.repartition(3)
-        .write.format("webhook_alerts")
-        .option("transport", "capture")
-        .option("path", path)
-        .option("batch_size", "40")
-        .mode("append")
-        .save()
-    )
-    lines = open(path).read().strip().splitlines()
-    rows = [json.loads(l) for l in lines if "__commit__" not in l]
-    commits = [json.loads(l) for l in lines if "__commit__" in l]
-    assert sorted(r["id"] for r in rows) == list(range(250))
-    assert all(r["v"] == 2 * r["id"] for r in rows)
-    assert commits == [{"__commit__": 250}]
-
-
-def test_webhook_alert_sink_validates_options(spark):
-    import pytest as _pytest
-
-    from trading_dashboard_spark.sources.datasource import AlertSinkWriter
-
-    with _pytest.raises(ValueError, match="path"):
-        AlertSinkWriter({"transport": "capture"})
-    with _pytest.raises(ValueError, match="endpoint"):
-        AlertSinkWriter({"transport": "http"})
-
-
 def test_export_dataset_orc_roundtrip(spark, tmp_path):
     """ORC export (the third columnar interchange format Spark ships
     natively) roundtrips schema + values."""

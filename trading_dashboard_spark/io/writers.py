@@ -104,10 +104,9 @@ def merge_upsert_partitioned(
     write never scans the files it is replacing.
     """
     vals = [r[0] for r in updates.select(partition_col).distinct().collect()]
-    updates = dedup_by_key(updates, keys)
     target = _read_existing(spark, path)
     if target is None:
-        merged = updates
+        merged = dedup_by_key(updates, keys)
     else:
         affected = target.filter(F.col(partition_col).isin(vals))
         merged = merge_upsert(affected, updates, keys).select(*target.columns)

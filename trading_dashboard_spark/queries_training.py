@@ -1414,7 +1414,7 @@ def _dsir_weights(docs, lane: str = "arrow"):
     # are exact Python integer sums, and the log-ratio relation becomes
     # a B-row literal whose `lr` is the SAME JVM log expression over the
     # same exact-long inputs (bit-identical doubles; full-output
-    # equality pinned at ×10 and ×100 — tools/ab_dsir.py). Corpus
+    # equality pinned at ×10 and ×100 — OPTIMIZATION_r12.md). Corpus
     # passes: 3 → 2; the two histogram aggregation exchanges and the
     # nested broadcast join disappear from the plan. Persisting `db` to
     # reach one pass was A/B'd at ×100 (2.6–4.2 s vs 3.0–3.3 s — within

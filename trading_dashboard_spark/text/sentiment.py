@@ -46,9 +46,9 @@ SQL-replicable: ``vader_oracle_sql()`` renders the *same* lexicon and
 constants into a DuckDB query, which is how the driver hash-checks this
 Python-UDF lane (queries_text.doc_sentiment).
 
-Real NLTK VADER remains an explicit opt-in (``engine="nltk"``) rather
-than an import-triggered default so the builtin path — the one the oracle
-replicates — stays deterministic regardless of what is installed.
+The builtin scorer is the only engine: it does not switch to an installed
+NLTK, so the path the oracle replicates stays deterministic regardless of
+what is installed.
 """
 
 from __future__ import annotations
@@ -273,28 +273,11 @@ def _sentiment_udf(texts: pd.Series) -> pd.Series:
     return texts.map(vader_score)
 
 
-def _nltk_udf():
-    @F.pandas_udf(T.DoubleType())
-    def udf(texts: pd.Series) -> pd.Series:
-        from nltk.sentiment import SentimentIntensityAnalyzer  # type: ignore
-
-        sia = SentimentIntensityAnalyzer()  # init once per executor batch
-        return texts.fillna("").map(lambda t: sia.polarity_scores(t)["compound"])
-
-    return udf
-
-
-def sentiment_score(
-    headline: Column, summary: Column | None = None, engine: str = "builtin"
-) -> Column:
+def sentiment_score(headline: Column, summary: Column | None = None) -> Column:
     """U1 — compound sentiment of ``headline + ' ' + summary`` (null-safe
-    concat mirrors the reference's ``or ''`` fallback at :173).
-
-    ``engine="builtin"`` (default) is the vendored deterministic VADER;
-    ``engine="nltk"`` opts into real NLTK VADER where installed."""
+    concat mirrors the reference's ``or ''`` fallback at :173), scored by
+    the vendored deterministic VADER (:func:`vader_score`)."""
     text = headline if summary is None else F.concat_ws(" ", headline, summary)
-    if engine == "nltk":
-        return _nltk_udf()(text)
     return _sentiment_udf(text)
 
 
