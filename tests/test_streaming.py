@@ -487,3 +487,62 @@ def test_streaming_dsir_admission_model_drifts_with_admissions(spark, tmp_path):
     assert got["feedM"]["n_admitted"] == 1 and got["feedM"]["mean_lw"] > 0
     assert got["feedG"]["n_admitted"] == 1 and got["feedG"]["mean_lw"] > 0
     assert got["feedM2"]["n_admitted"] == 0 and got["feedM2"]["mean_lw"] < 0
+
+
+def test_streaming_dsir_admission_empty_histogram_admits_nothing(spark, tmp_path):
+    """No incumbent docs: the model histogram is empty, so n_raw = n_tgt
+    = 0 and every bucket's log ratio is exactly 0.0, not NULL. Every
+    weight is 0.0, nothing is admitted on any trigger (not even target
+    text), and the result equals the DuckDB oracle."""
+    import hashlib
+
+    import duckdb
+    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from tools.check_oracle import compare
+    from trading_dashboard_spark.queries import QUERY_REGISTRY
+    from trading_dashboard_spark.queries_streaming import (
+        streaming_dsir_admission,
+    )
+    from trading_dashboard_spark.queries_training import (
+        _DSIR_BUCKETS, _dsir_log_ratio,
+    )
+
+    empty = _dsir_log_ratio(spark, [(b, 0, 0) for b in range(_DSIR_BUCKETS)])
+    assert sorted(r["lr"] for r in empty.collect()) == [0.0] * _DSIR_BUCKETS
+
+    def slot(i):
+        h = hashlib.md5(str(i).encode()).hexdigest()
+        wave = 0 if h[2] < "6" else 1 if h[2] < "b" else 2
+        return h[:2] >= "cd", wave
+
+    ids = {}  # two non-incumbent ids per wave
+    for i in range(1, 10_000):
+        ok, wave = slot(i)
+        if ok and len(ids.setdefault(wave, [])) < 2:
+            ids[wave].append(i)
+        if sum(map(len, ids.values())) == 6:
+            break
+    texts = ["good clean quality prose text", "spam junk noise garbage filler"]
+    rows = [
+        (i, texts[j], ("en", "xx")[j], f"w{wave}{('en', 'xx')[j]}", len(texts[j]))
+        for wave, pair in sorted(ids.items()) for j, i in enumerate(pair)
+    ]
+    pdf = pd.DataFrame(
+        rows, columns=["doc_id", "text", "lang", "source", "n_chars"]
+    )
+    pq.write_table(pa.Table.from_pandas(pdf),
+                   str(tmp_path / "documents.parquet"))
+
+    got = streaming_dsir_admission(spark, str(tmp_path)).toPandas()
+    assert sorted(got["source"]) == sorted(pdf["source"])
+    assert (got["n_batch"] == 1).all() and (got["n_admitted"] == 0).all()
+    assert got["mean_lw"].notna().all() and (got["mean_lw"] == 0.0).all()
+
+    con = duckdb.connect()
+    con.register("documents", pdf)
+    want = con.execute(QUERY_REGISTRY["streaming_dsir_admission"].oracle).fetchdf()
+    con.close()
+    assert not compare("streaming_dsir_admission", got, want)

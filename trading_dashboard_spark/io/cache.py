@@ -1,4 +1,5 @@
-"""One bounded, version-keyed cache for scan handles and shared relations.
+"""One bounded, version-keyed cache for scan handles, shared relations
+and dashboard loader plans.
 
 Keys are (``sparkContext.applicationId``, version); a version names the
 bytes a value was built from:
@@ -13,10 +14,18 @@ bytes a value was built from:
   The plan hash alone is no version: ``spark.read.parquet(p)`` hashes
   the same before and after ``p`` is replaced.
 
-``load_table`` caches lazy scan handles (a hit skips ~100 ms of listing
-and footer inference; every action still re-reads the files).
-``_daily_close`` and the ``queries_text`` corpus relations cache eager
-``localCheckpoint``s, so their consumers pay the job once per version.
+Three kinds of value share the mechanism:
+
+- ``load_table`` caches lazy scan handles (a hit skips ~100 ms of
+  listing and footer inference; every action still re-reads the files).
+- ``_daily_close`` and the ``queries_text`` corpus relations cache eager
+  ``localCheckpoint``s, so their consumers pay the job once per version.
+- ``query_registry.register`` caches the DataFrame each loader that
+  declares ``inputs`` builds (the ``plans`` cache), keyed on the query
+  name and the :func:`file_version` of each input table. A hit skips
+  planning, and because it is the same DataFrame object its actions
+  reuse the analysed and planned query and every shuffle and broadcast
+  stage an earlier action finished: only the final stage re-runs.
 
 The session part of the key is the ``applicationId``, never
 ``id(session)``, which CPython recycles after GC; an entry also holds a

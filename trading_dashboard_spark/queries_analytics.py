@@ -1137,6 +1137,7 @@ def event_type_dow_chi2(spark, sf_dir):
     FROM ranked WHERE rk = 1
     """,
     tags=("window", "downsample", "dashboard", "O4"),
+    inputs=("events",),
 )
 def lttb_downsampled_closes(spark, sf_dir):
     """Perceptual downsampling for chart rendering (the LTTB family,

@@ -30,6 +30,7 @@ _WIN = "PARTITION BY user_id ORDER BY d"
     "top_losers",
     latest_movers_sql(descending=False),
     tags=("dashboard", "J1", "J4", "W1", "O3", "P18"),
+    inputs=("events", "customer"),
 )
 def top_losers(spark, sf_dir):
     """`load_top_losers` (data_loader.py:157-180) — the ASC twin of the
@@ -54,6 +55,7 @@ def top_losers(spark, sf_dir):
     LIMIT 10
     """,
     tags=("dashboard", "J6", "O3", "P18", "P8"),
+    inputs=("events",),
 )
 def high_volatility_top10(spark, sf_dir):
     """`load_high_volatility_stocks` (data_loader.py:219-232) — latest
@@ -91,6 +93,7 @@ def high_volatility_top10(spark, sf_dir):
     WHERE prev_close IS NOT NULL
     """,
     tags=("dashboard", "O4", "W1", "F9"),
+    inputs=("events",),
 )
 def latest_prediction_per_symbol(spark, sf_dir):
     """`load_stock_predictions` (data_loader.py:60-71) — latest prediction
@@ -124,6 +127,7 @@ def latest_prediction_per_symbol(spark, sf_dir):
     LIMIT 5
     """,
     tags=("dashboard", "P5", "O2", "O5"),
+    inputs=("events",),
 )
 def company_news_latest5(spark, sf_dir):
     """`load_company_news` (data_loader.py:83-94) — per-symbol latest-5
@@ -181,6 +185,7 @@ def company_news_latest5(spark, sf_dir):
     LIMIT 100
     """,
     tags=("dashboard", "J3", "J6", "O5", "patterns"),
+    inputs=("events", "customer"),
 )
 def trading_patterns_top100(spark, sf_dir):
     """`load_trading_patterns` (data_loader.py:106-120) — the detected
@@ -223,6 +228,7 @@ def trading_patterns_top100(spark, sf_dir):
     LIMIT 200
     """,
     tags=("dashboard", "A5", "O1"),
+    inputs=("customer",),
 )
 def company_list(spark, sf_dir):
     """`load_company_list` (data_loader.py:22-40) — the sidebar dropdown
@@ -253,6 +259,7 @@ def company_list(spark, sf_dir):
     ORDER BY d DESC
     """,
     tags=("dashboard", "P5", "P6", "O2"),
+    inputs=("events",),
 )
 def stock_history_range(spark, sf_dir):
     """`load_stock_data` (data_loader.py:42-57) — one company's bars over
@@ -296,6 +303,7 @@ def stock_history_range(spark, sf_dir):
     LIMIT 10
     """,
     tags=("dashboard", "J6", "W1", "O3", "P18"),
+    inputs=("events",),
 )
 def market_trends_latest(spark, sf_dir):
     """`load_market_trends` (data_loader.py:181-199) — latest-date percent

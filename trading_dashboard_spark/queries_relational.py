@@ -52,6 +52,7 @@ def pricing_summary(spark, sf_dir):
     "top_gainers",
     latest_movers_sql(descending=True),
     tags=("flagship", "J1", "J4", "W1", "O3", "P18"),
+    inputs=("events", "customer"),
 )
 def top_gainers(spark, sf_dir):
     """Flagship (SURVEY.md §7.2): the reference's "top gainers" dashboard

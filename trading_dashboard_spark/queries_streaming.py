@@ -1151,15 +1151,21 @@ def streaming_dsir_admission(spark, sf_dir):
     bounded ≤256-row delta collect folded into the driver dict — the
     old third checkpoint job (union+groupBy+checkpoint of the whole
     model) is gone. Decisions are batch-sized; nothing
-    corpus-proportional shuffles per trigger."""
+    corpus-proportional shuffles per trigger.
+
+    With no incumbent docs the histogram is empty, so ``n_raw = n_tgt
+    = 0`` and every bucket's ``lr`` is ln(1/B) − ln(1/B) = exactly 0.0
+    (`_dsir_log_ratio`), not NULL; the oracle's ``ln`` of an empty
+    total is NULL and coalesces to the same 0.0. Every weight is then
+    0.0, no document is admitted on that trigger, the histogram stays
+    empty, and so no trigger admits."""
     import shutil
     import tempfile
 
     from .queries_training import (
-        _DSIR_BUCKETS, _dsir_bucket_counts_arrow,
+        _DSIR_BUCKETS, _dsir_bucket_counts_arrow, _dsir_log_ratio,
     )
 
-    B = float(_DSIR_BUCKETS)
     docs = _t(spark, sf_dir, "documents")
     h = F.md5(F.col("doc_id").cast("string"))
     incumbent = F.substring(h, 1, 2) < "cd"
@@ -1200,28 +1206,18 @@ def streaming_dsir_admission(spark, sf_dir):
     def admit_batch(batch_df, batch_id):
         db = bucket_counts(batch_df).localCheckpoint(eager=True)
         hist = state["hist"]
-        n_raw = sum(v[0] for v in hist.values())
-        n_tgt = sum(v[1] for v in hist.values())
         # the model is DENSE by definition — all B buckets score, so a
         # token whose bucket the model has never seen still gets the
         # smoothed default ln(1/(n_tgt+B)) - ln(1/(n_raw+B)) instead of
         # silently dropping out of the join. r12: the ratio is a B-row
-        # literal built from the driver-held exact-integer histogram —
-        # `lr` is the SAME JVM log expression over the same longs the
-        # old range-join/broadcast-totals subplan fed it (bit-identical
+        # literal built from the driver-held exact-integer histogram by
+        # `_dsir_log_ratio`, the builder `_dsir_weights` uses — the same
+        # JVM log expression over the same longs the old
+        # range-join/broadcast-totals subplan fed it (bit-identical
         # doubles; lane outputs pinned identical at sf0.01 and ×10).
-        ratio = spark.createDataFrame(
-            [
-                (bk, hist.get(bk, (0, 0))[0], hist.get(bk, (0, 0))[1])
-                for bk in range(_DSIR_BUCKETS)
-            ],
-            "b long, c_raw long, c_tgt long",
-        ).select(
-            "b",
-            (
-                F.log((F.col("c_tgt") + 1.0) / (F.lit(n_tgt).cast("long") + B))
-                - F.log((F.col("c_raw") + 1.0) / (F.lit(n_raw).cast("long") + B))
-            ).alias("lr"),
+        ratio = _dsir_log_ratio(
+            spark,
+            [(bk, *hist.get(bk, (0, 0))) for bk in range(_DSIR_BUCKETS)],
         )
         scored = (
             db.join(F.broadcast(ratio), "b")

@@ -1361,11 +1361,36 @@ def _dsir_weights_ctes(src: str = "documents") -> str:
 _DSIR_WEIGHTS_CTES = _dsir_weights_ctes()
 
 
+def _dsir_log_ratio(spark, counts: list[tuple[int, int, int]]):
+    """The per-bucket log ratio ``lr = ln p̂[b] − ln q̂[b]`` as a literal
+    relation ``(b, lr)``, from exact-integer histogram rows ``(b, c_raw,
+    c_tgt)``; the totals are exact Python sums. An empty model (every
+    count 0) gives ``lr`` = ln(1/B) − ln(1/B) = exactly 0.0 in every
+    bucket, not NULL."""
+    n_raw = sum(c[1] for c in counts)
+    n_tgt = sum(c[2] for c in counts)
+    B = float(_DSIR_BUCKETS)
+    return spark.createDataFrame(counts, "b long, c_raw long, c_tgt long").select(
+        "b",
+        (
+            F.log((F.col("c_tgt") + 1.0) / (F.lit(n_tgt).cast("long") + B))
+            - F.log((F.col("c_raw") + 1.0) / (F.lit(n_raw).cast("long") + B))
+        ).alias("lr"),
+    )
+
+
 def _dsir_weights(docs, lane: str = "arrow"):
     """The DSIR scoring pipeline over an arbitrary document relation —
     shared by the raw-pool query, the Gumbel resample, and the
     dedup-then-score curation pipeline. See dsir_importance_weights
-    for the full semantics/scale commentary."""
+    for the full semantics/scale commentary.
+
+    Calling it starts a Spark job: the bounded ≤256-row ``hist_rows``
+    collect runs here, while the plan is built, and its counts become
+    a literal in the returned plan. So the ``queries.plan_ms`` of every
+    registry query over it includes that execution, and those queries
+    are not candidates for ``register(inputs=...)``, whose plan cache
+    is for loaders that only plan when called."""
     from .text.analysis import tokenize
 
     # The ONE occurrence-sized pass: tokenize → (doc, bucket) counts
@@ -1428,24 +1453,9 @@ def _dsir_weights(docs, lane: str = "arrow"):
             ).alias("c_tgt"),
         )
     ).collect()
-    n_raw = sum(r["c_raw"] for r in hist_rows)
-    n_tgt = sum(r["c_tgt"] for r in hist_rows)
-    B = float(_DSIR_BUCKETS)
-    ratio = (
-        docs.sparkSession.createDataFrame(
-            [
-                (int(r["b"]), int(r["c_raw"]), int(r["c_tgt"]))
-                for r in hist_rows
-            ],
-            "b long, c_raw long, c_tgt long",
-        )
-        .select(
-            "b",
-            (
-                F.log((F.col("c_tgt") + 1.0) / (F.lit(n_tgt).cast("long") + B))
-                - F.log((F.col("c_raw") + 1.0) / (F.lit(n_raw).cast("long") + B))
-            ).alias("lr"),
-        )
+    ratio = _dsir_log_ratio(
+        docs.sparkSession,
+        [(int(r["b"]), int(r["c_raw"]), int(r["c_tgt"])) for r in hist_rows],
     )
     return (
         db.join(F.broadcast(ratio), "b")
@@ -1486,7 +1496,11 @@ def dsir_importance_weights(spark, sf_dir, lane: str = "arrow"):
     3 plan-branch executions to 2); the per-doc weight is one
     partial-agg shuffle keyed doc_id over bucket-count rows (≤B per
     doc). 4dp rounding is the house ulp discipline for cross-engine
-    float sums."""
+    float sums.
+
+    Calling this function starts a Spark job: `_dsir_weights` collects
+    the histogram while it builds the plan, so ``queries.plan_ms``
+    includes execution and the query declares no ``inputs``."""
     return _dsir_weights(_t(spark, sf_dir, "documents"), lane)
 
 

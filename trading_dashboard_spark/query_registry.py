@@ -21,6 +21,7 @@ integration test of the public API.
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
@@ -38,18 +39,64 @@ class QuerySpec:
     oracle: str | None  # DuckDB SQL, or None -> rows-only check
     tags: tuple[str, ...] = field(default_factory=tuple)
     doc: str = ""
+    inputs: tuple[str, ...] = ()  # testdata tables a cached loader reads
 
 
 QUERY_REGISTRY: dict[str, QuerySpec] = {}
 
+#: one built DataFrame per (loader, input versions): ~2 versions of the
+#: ten dashboard loaders; a superseded plan's shuffle files and
+#: broadcasts go to Spark's ContextCleaner once it is evicted
+_PLANS = VersionCache("plans", 20)
 
-def register(name: str, oracle: str | None, tags: tuple[str, ...] = (), doc: str = ""):
+
+def register(
+    name: str,
+    oracle: str | None,
+    tags: tuple[str, ...] = (),
+    doc: str = "",
+    inputs: tuple[str, ...] = (),
+):
+    """Register ``fn(spark, sf_dir) -> DataFrame`` as query ``name``.
+
+    ``inputs`` names every testdata table the function reads through
+    ``load_table`` (directly or through ``_daily_close``), and promises
+    that the DataFrame it builds depends on nothing else: not on the
+    time of the call, not on any other file. When given, the registry
+    stores (and the decorator returns) a wrapper that keeps the built
+    DataFrame in the ``plans`` cache (io/cache.py), keyed on the name
+    and the ``file_version`` of each input, statted before any planning.
+    A hit returns the same DataFrame object, so its ``collect()`` reuses
+    the analysed and planned query and the shuffle and broadcast stages
+    an earlier action finished: only the final stage runs. A replaced
+    input is a new key; an unstatable one is not cached.
+
+    Session confs are not in the key. The cache hits only for the
+    session object that built the entry, and every session the registry
+    runs on has ``session.RUNTIME_CONFS`` set before each call (by
+    ``get_spark``'s builder, or by the driver adapter on a session it
+    did not build); the plan captures them when it is analysed.
+    """
+
     def deco(fn):
         sql = portable_round_sql(oracle) if oracle else oracle
-        QUERY_REGISTRY[name] = QuerySpec(fn, sql, tags, doc or (fn.__doc__ or ""))
-        return fn
+        run = _cached_plan(name, fn, inputs) if inputs else fn
+        QUERY_REGISTRY[name] = QuerySpec(
+            run, sql, tags, doc or (fn.__doc__ or ""), inputs
+        )
+        return run
 
     return deco
+
+
+def _cached_plan(name: str, fn, inputs: tuple[str, ...]):
+    @functools.wraps(fn)
+    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+        versions = tuple(file_version(table_path(t, sf_dir)) for t in inputs)
+        key = None if None in versions else (name, versions)
+        return _PLANS.get_or_compute(spark, key, lambda: fn(spark, sf_dir))
+
+    return run
 
 
 def _t(spark, sf_dir, name) -> DataFrame:
