@@ -144,11 +144,14 @@ def main() -> None:
 
     timings: dict[str, float] = {}
     for name in BENCH_QUERIES:
+        # a loader registered with inputs= is a result-caching wrapper;
+        # time the loader itself, so every run plans and executes
         spec = QUERY_REGISTRY[name]
+        fn = getattr(spec.fn, "__wrapped__", spec.fn)
         best = float("inf")
         for _ in range(SPARK_RUNS):
             t0 = time.time()
-            spec.fn(spark, SF_DIR).write.mode("overwrite").format("noop").save()
+            fn(spark, SF_DIR).write.mode("overwrite").format("noop").save()
             best = min(best, time.time() - t0)
         timings[name] = round(best, 3)
 

@@ -156,6 +156,25 @@ def test_derive_patterns_shapes(spark):
     assert "Bullish Trend" in cats and "High Volatility" in cats
 
 
+def test_detect_trends_computes_each_lag_window_once(spark):
+    """The trend CASE uses lag 1 four times and lag 2 twice; the plan's
+    one Window node computes each of them once."""
+    from trading_dashboard_spark.operators.patterns import detect_trends
+
+    df = spark.createDataFrame(
+        [("S", t, c) for t, c in enumerate([1.0, 2.0, 3.0, 2.0, 1.0])],
+        "k string, t int, c double",
+    )
+    out = detect_trends(df, "k", "t", "c")
+    assert sorted((r["time"], r["pattern"]) for r in out.collect()) == [
+        (2, "Bullish Trend"), (4, "Bearish Trend")
+    ]
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    windows = [line for line in plan.splitlines() if "Window [" in line]
+    assert len(windows) == 1
+    assert windows[0].count("windowspecdefinition") == 2
+
+
 def test_correlate_signal_with_price_defaults(spark):
     news = spark.createDataFrame(
         [("A", dt.date(2024, 1, 2), 0.5), ("B", dt.date(2024, 1, 2), -0.5)],

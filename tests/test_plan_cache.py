@@ -1,6 +1,8 @@
 """The ``plans`` cache of the dashboard loaders (query_registry.register
-with ``inputs=``): exact across input versions, complete in its declared
-inputs, built once under concurrency, and never shared across sessions."""
+with ``inputs=``): exact across input versions, promoted to its rows on
+the first hit, one version per loader, complete in its declared inputs,
+built and promoted once under concurrency, and never shared across
+sessions."""
 
 import os
 import shutil
@@ -15,8 +17,8 @@ from test_operators import _events_table, _land
 from tools.check_oracle import TABLES, compare
 
 import __spark_entry__ as contract
-from trading_dashboard_spark import queries_relational
-from trading_dashboard_spark.io.cache import cache_stats
+from trading_dashboard_spark import queries_relational, query_registry
+from trading_dashboard_spark.io.cache import cache_stats, file_version
 from trading_dashboard_spark.io.readers import load_table, table_path
 from trading_dashboard_spark.queries import QUERY_REGISTRY
 
@@ -56,6 +58,27 @@ def _assert_oracle(con, name, got: pd.DataFrame) -> pd.DataFrame:
     return want
 
 
+def _jobs(sc, group, f):
+    """``f()`` and the number of Spark jobs it started."""
+    sc.setJobGroup(group, group)
+    try:
+        out = f()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _fields(df) -> list:
+    return [(f.name, f.dataType, f.nullable) for f in df.schema.fields]
+
+
+def _plans_under(d) -> list[tuple[str, tuple]]:
+    """(loader, input versions) of every ``plans`` entry reading ``d``."""
+    root = os.path.abspath(d)
+    return [(name, versions) for _app, (name, versions) in query_registry._PLANS
+            if os.path.dirname(versions[0][0]) == root]
+
+
 def test_cached_loaders_are_the_dashboard_loaders():
     assert sorted(CACHED) == sorted(
         n for n, s in QUERY_REGISTRY.items()
@@ -68,10 +91,13 @@ def test_cached_loaders_are_the_dashboard_loaders():
 
 def test_plan_cache_exact_across_events_versions(spark, sf01, tmp_path):
     """Three consecutive `events` versions, each landed by atomic rename
-    next to a fixed `customer`: on every version every cached loader
-    equals its DuckDB oracle; a repeat call returns the same DataFrame,
-    whose collect starts at most one job; the nine `events` loaders miss
-    once per version while `company_list` keeps hitting."""
+    next to a fixed `customer`. On every version, for every cached
+    loader: a miss's collect starts the jobs the unwrapped loader's does;
+    the first hit promotes the plan to its rows (at most one job, same
+    schema), and from then on every call returns that relation, whose
+    collect starts no job and equals the DuckDB oracle. The nine `events`
+    loaders miss once per version and keep only their latest version,
+    while `company_list` keeps hitting."""
     import pyarrow as pa
 
     d = _copy_inputs(["customer"], sf01, tmp_path)
@@ -90,25 +116,35 @@ def test_plan_cache_exact_across_events_versions(spark, sf01, tmp_path):
         con.register("events", table)
         before = cache_stats()["plans"]
         for name in CACHED:
+            tag = f"plans-{k}-{name}"
             fn = QUERY_REGISTRY[name].fn
+            misses = cache_stats()["plans"]["misses"]
             df = fn(spark, d)
-            rows = df.collect()
+            rows, jobs = _jobs(sc, f"{tag}-first", df.collect)
             want = _assert_oracle(con, name, _frame(df, rows))
             seen[name].add(want.to_csv(index=False))
+            if cache_stats()["plans"]["misses"] > misses:
+                plain = fn.__wrapped__(spark, d)
+                assert jobs == _jobs(sc, f"{tag}-plain", plain.collect)[1], (k, name)
+            else:  # `customer` did not change: already promoted
+                assert (name, k, jobs) == ("company_list", k, 0)
 
-            group = f"plans-repeat-{k}-{name}"
-            sc.setJobGroup(group, "repeat call on one input version")
-            try:
-                again = fn(spark, d)
-                again_rows = again.collect()
-            finally:
-                sc.setLocalProperty("spark.jobGroup.id", None)
-            assert again is df, (k, name)
-            assert again_rows == rows, (k, name)
-            assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 1, (k, name)
+            promoted, promote_jobs = _jobs(sc, f"{tag}-promote", lambda: fn(spark, d))
+            assert promote_jobs <= 1, (k, name)
+            assert _fields(promoted) == _fields(df), (k, name)
+            third = fn(spark, d)
+            third_rows, third_jobs = _jobs(sc, f"{tag}-third", third.collect)
+            assert third is promoted and third_jobs == 0, (k, name)
+            _assert_oracle(con, name, _frame(third, third_rows))
         after = cache_stats()["plans"]
         assert after["misses"] - before["misses"] == (10 if k == 0 else 9), k
-        assert after["hits"] - before["hits"] == (10 if k == 0 else 11), k
+        assert after["hits"] - before["hits"] == (20 if k == 0 else 21), k
+        assert after["promotions"] - before["promotions"] == (10 if k == 0 else 9), k
+        live = _plans_under(d)
+        assert sorted(n for n, _v in live) == sorted(CACHED), k
+        for name, versions in live:  # none for a superseded version
+            inputs = QUERY_REGISTRY[name].inputs
+            assert versions == tuple(file_version(table_path(t, d)) for t in inputs)
     # every events loader's answer moved, so a stale hit would have shown
     assert [n for n, s in seen.items() if len(s) == 1] == ["company_list"]
     con.close()
@@ -128,44 +164,76 @@ def test_declared_inputs_are_complete(spark, sf01, tmp_path, name):
         load_table(spark, undeclared, d)
 
 
-def test_plan_cache_concurrent_cold_key_builds_once(spark, sf01, tmp_path):
-    """Four threads asking for one cold key build the plan once and
-    share it; their concurrent collects return the oracle's rows."""
-    d = _copy_inputs(["events", "customer"], sf01, tmp_path)
-    fn = QUERY_REGISTRY["top_gainers"].fn
+def _four_threads(call) -> list:
     start = threading.Barrier(4)
 
-    def call():
+    def run():
         start.wait(30)
+        return call()
+
+    with ThreadPoolExecutor(4) as pool:
+        return [f.result(timeout=300) for f in [pool.submit(run) for _ in range(4)]]
+
+
+def test_plan_cache_concurrent_cold_key_builds_once(spark, sf01, tmp_path):
+    """Four threads asking for one cold key build the plan once: one
+    gets the plan, the three that waited share its promoted rows, and
+    every collect returns the oracle's rows."""
+    d = _copy_inputs(["events", "customer"], sf01, tmp_path)
+    fn = QUERY_REGISTRY["top_gainers"].fn
+
+    def call():
         df = fn(spark, d)
         return df, df.collect()
 
     before = cache_stats()["plans"]
-    with ThreadPoolExecutor(4) as pool:
-        results = [f.result(timeout=300) for f in
-                   [pool.submit(call) for _ in range(4)]]
+    results = _four_threads(call)
     after = cache_stats()["plans"]
     assert after["misses"] - before["misses"] == 1
     assert after["hits"] - before["hits"] == 3
-    df, rows = results[0]
-    assert all(other is df and got == rows for other, got in results)
+    assert after["promotions"] - before["promotions"] == 1
+    frames = {id(df): df for df, _rows in results}
+    assert len(frames) == 2
     con = _duck(d, ["events", "customer"])
-    _assert_oracle(con, "top_gainers", _frame(df, rows))
+    for df, rows in results:
+        _assert_oracle(con, "top_gainers", _frame(df, rows))
     con.close()
+
+
+def test_plan_cache_concurrent_hits_promote_once(spark, sf01, tmp_path):
+    """Four threads hitting one built, not yet promoted key promote it
+    once and all get the same local relation; its collect starts no job."""
+    d = _copy_inputs(["events", "customer"], sf01, tmp_path)
+    fn = QUERY_REGISTRY["top_gainers"].fn
+    planned = fn(spark, d)
+    before = cache_stats()["plans"]
+    results = _four_threads(lambda: fn(spark, d))
+    after = cache_stats()["plans"]
+    assert after["hits"] - before["hits"] == 4
+    assert after["promotions"] - before["promotions"] == 1
+    assert after["misses"] == before["misses"]
+    assert all(df is results[0] for df in results) and results[0] is not planned
+    rows, jobs = _jobs(spark.sparkContext, "plans-promoted-concurrent", results[0].collect)
+    assert jobs == 0
+    assert rows == planned.collect()
 
 
 def test_plan_cache_never_serves_another_sessions_dataframe(
     spark, sf01, tmp_path
 ):
     """A session from `newSession()`, called through the driver adapter,
-    gets a DataFrame of its own on the same input versions, and so does
-    the first session afterwards."""
+    gets a plan and promoted rows of its own on the same input versions,
+    and so does the first session afterwards."""
     assert QUERY_REGISTRY["top_gainers"].fn is queries_relational.top_gainers
     d = _copy_inputs(["events", "customer"], sf01, tmp_path)
-    mine = queries_relational.top_gainers(spark, d)
+    top_gainers = queries_relational.top_gainers
+    mine = [top_gainers(spark, d), top_gainers(spark, d)]  # plan, rows
     other = spark.newSession()
-    theirs = contract.queries()["top_gainers"](other, d)
-    assert theirs is not mine and theirs.sparkSession is other
-    assert theirs.collect() == mine.collect()
-    again = queries_relational.top_gainers(spark, d)
-    assert again is not theirs and again.sparkSession is spark
+    call = contract.queries()["top_gainers"]
+    theirs = [call(other, d), call(other, d)]
+    for df in theirs:
+        assert df.sparkSession is other and all(df is not m for m in mine)
+        assert df._jdf.sparkSession().equals(other._jsparkSession)
+        assert df.collect() == mine[0].collect()
+    again = top_gainers(spark, d)
+    assert again.sparkSession is spark and all(again is not t for t in theirs)

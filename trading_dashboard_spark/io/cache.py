@@ -1,5 +1,5 @@
 """One bounded, version-keyed cache for scan handles, shared relations
-and dashboard loader plans.
+and dashboard loader results.
 
 Keys are (``sparkContext.applicationId``, version); a version names the
 bytes a value was built from:
@@ -20,12 +20,21 @@ Three kinds of value share the mechanism:
   listing and footer inference; every action still re-reads the files).
 - ``_daily_close`` and the ``queries_text`` corpus relations cache eager
   ``localCheckpoint``s, so their consumers pay the job once per version.
-- ``query_registry.register`` caches the DataFrame each loader that
-  declares ``inputs`` builds (the ``plans`` cache), keyed on the query
-  name and the :func:`file_version` of each input table. A hit skips
-  planning, and because it is the same DataFrame object its actions
-  reuse the analysed and planned query and every shuffle and broadcast
-  stage an earlier action finished: only the final stage re-runs.
+- ``query_registry.register`` caches the result of each loader that
+  declares ``inputs`` (the ``plans`` cache), keyed on the query name and
+  the :func:`file_version` of each input table, like the reference's
+  ``st.cache_data`` but exact instead of a 1 h TTL. A miss returns the
+  planned DataFrame as built, with no extra job. The first hit on a key
+  promotes it (``promote=True``): :func:`local_rows` runs the cached
+  DataFrame once inside the JVM, reusing its finished shuffle and
+  broadcast stages (the one job a repeat of the plan would run), and the
+  entry keeps the rows as a local relation instead, whose actions start
+  no job. The planned DataFrame is dropped, so its shuffle files and
+  broadcasts go to Spark's ContextCleaner. ``df.cache()`` would not do:
+  the CacheManager matches on plan, and a scan of a replaced file plans
+  the same, so a rebuilt loader could be served old rows. Each loader
+  keeps one version per input paths (the ``slot``): caching a new
+  version drops the superseded one.
 
 The session part of the key is the ``applicationId``, never
 ``id(session)``, which CPython recycles after GC; an entry also holds a
@@ -33,8 +42,9 @@ The session part of the key is the ``applicationId``, never
 Eviction is LRU and drops the reference without unpersisting: a
 checkpoint's lineage is cut, so unpersisting one a caller still holds
 would break that caller; Spark's ContextCleaner reclaims it once
-unreferenced (``clear(release)`` releases explicitly). Concurrent misses
-on one key compute once (a per-key lock), and a hit never waits on
+unreferenced (``clear(release)`` releases explicitly). A superseded
+slot entry counts as an eviction. Concurrent misses on one key compute
+once and a key is promoted once (a per-key lock); a hit never waits on
 another key's computation. :func:`cache_stats` reports the counters.
 """
 
@@ -43,7 +53,10 @@ from __future__ import annotations
 import os
 import threading
 import weakref
+from typing import NamedTuple
 from urllib.parse import unquote, urlparse
+
+from pyspark.sql import DataFrame
 
 _CACHES: weakref.WeakValueDictionary = weakref.WeakValueDictionary()
 
@@ -73,64 +86,114 @@ def relation_version(df) -> tuple | None:
     return None if None in versions else (plan, versions)
 
 
+class _Entry(NamedTuple):
+    session: weakref.ref
+    value: object
+    slot: object
+    settled: bool  # False: a plan to be promoted to its rows on a hit
+
+
+def local_rows(df: DataFrame) -> DataFrame:
+    """``df``'s rows as a local relation with ``df``'s schema. The rows
+    are collected inside the JVM (one job, reusing every stage ``df``
+    already finished) and never pass through Python; no action on the
+    result starts a job."""
+    spark = df.sparkSession
+    jdf = spark._jsparkSession.createDataFrame(
+        df._jdf.collectAsList(), df._jdf.schema()
+    )
+    return DataFrame(jdf, spark)
+
+
 class VersionCache:
     """Bounded LRU: (applicationId, version) → value, guarded by a
     session weakref. With ``checkpoint=True`` values are DataFrames kept
-    as eager ``localCheckpoint``s."""
+    as eager ``localCheckpoint``s; with ``promote=True`` a cached
+    DataFrame is replaced by its :func:`local_rows` on its first hit."""
 
-    def __init__(self, name: str, max_entries: int, checkpoint: bool = False):
-        self.max_entries, self.checkpoint = max_entries, checkpoint
-        self.hits = self.misses = self.evictions = 0
+    def __init__(self, name: str, max_entries: int, checkpoint: bool = False,
+                 promote: bool = False):
+        self.max_entries = max_entries
+        self.checkpoint, self.promote = checkpoint, promote
+        self.hits = self.misses = self.evictions = self.promotions = 0
         self._entries: dict = {}
         self._key_locks: dict = {}
         self._lock = threading.Lock()
         _CACHES[name] = self
 
-    def get_or_compute(self, spark, version, compute):
+    def get_or_compute(self, spark, version, compute, slot=None):
         """The value cached for ``version``, or ``compute()`` cached under
         it. Without a version, ``compute()`` is returned as is: not
-        cached, not checkpointed, not counted."""
+        cached, not checkpointed, not counted. Caching a value under a
+        ``slot`` drops the entries of every other version in that slot."""
         if version is None:
             return compute()
         key = (spark.sparkContext.applicationId, version)
         with self._lock:
-            hit = self._hit(key, spark)
-            if hit is not None:
-                return hit
+            entry = self._lookup(key, spark)
+            if entry is not None and entry.settled:
+                self.hits += 1
+                return entry.value
             key_lock = self._key_locks.setdefault(key, threading.Lock())
         with key_lock:
             try:
-                with self._lock:
-                    hit = self._hit(key, spark)  # computed while we waited
-                    if hit is not None:
-                        return hit
-                    self.misses += 1
-                value = compute()
-                if self.checkpoint:
-                    value = value.localCheckpoint(eager=True)
-                with self._lock:
-                    self._entries[key] = (weakref.ref(spark), value)
-                    while len(self._entries) > self.max_entries:
-                        self._entries.pop(next(iter(self._entries)))
-                        self.evictions += 1
+                return self._fill(spark, key, compute, slot)
             finally:
                 with self._lock:
-                    self._key_locks.pop(key, None)
+                    entry = self._entries.get(key)
+                    if entry is None or entry.settled:
+                        self._key_locks.pop(key, None)
+
+    def _fill(self, spark, key, compute, slot):
+        """Under ``key``'s lock: compute a missing value, or promote an
+        unsettled one."""
+        with self._lock:
+            entry = self._lookup(key, spark)  # filled while we waited?
+            if entry is None:
+                self.misses += 1
+            else:
+                self.hits += 1
+                if entry.settled:
+                    return entry.value
+        if entry is not None:
+            value = local_rows(entry.value)
+            with self._lock:
+                self.promotions += 1
+                if self._entries.get(key) is entry:  # not dropped meanwhile
+                    self._entries[key] = entry._replace(value=value, settled=True)
+            return value
+        value = compute()
+        if self.checkpoint:
+            value = value.localCheckpoint(eager=True)
+        with self._lock:
+            if slot is not None:
+                for k in [k for k, e in self._entries.items() if e.slot == slot]:
+                    self._drop(k)
+            self._entries[key] = _Entry(weakref.ref(spark), value, slot,
+                                        not self.promote)
+            while len(self._entries) > self.max_entries:
+                self._drop(next(iter(self._entries)))
         return value
 
-    def _hit(self, key, spark):
+    def _lookup(self, key, spark):
+        """``key``'s entry, made the most recent; None if absent or if it
+        belongs to another session (that entry is dropped)."""
         entry = self._entries.pop(key, None)
-        if entry is None or entry[0]() is not spark:
+        if entry is None or entry.session() is not spark:
             return None
         self._entries[key] = entry
-        self.hits += 1
-        return entry[1]
+        return entry
+
+    def _drop(self, key) -> None:
+        del self._entries[key]
+        self._key_locks.pop(key, None)
+        self.evictions += 1
 
     def clear(self, release=None) -> None:
         """Drop every entry, first calling ``release(value)`` on each
         when given."""
         with self._lock:
-            values = [v for _ref, v in self._entries.values()]
+            values = [e.value for e in self._entries.values()]
             self._entries.clear()
         if release is not None:
             for v in values:
@@ -147,9 +210,10 @@ class VersionCache:
 
 
 def cache_stats() -> dict[str, dict[str, int]]:
-    """Hits, misses, evictions and live entries of every cache, by name."""
+    """Hits, misses, evictions, promotions and live entries of every
+    cache, by name."""
     return {
-        name: {"hits": c.hits, "misses": c.misses,
-               "evictions": c.evictions, "entries": len(c)}
+        name: {"hits": c.hits, "misses": c.misses, "evictions": c.evictions,
+               "promotions": c.promotions, "entries": len(c)}
         for name, c in list(_CACHES.items())
     }

@@ -25,18 +25,20 @@ def detect_trends(
     """
     w = per_key_window(key, time)
     c = F.col(price)
-    l1 = F.lag(c, 1).over(w)
-    l2 = F.lag(c, 2).over(w)
+    lagged = df.select(
+        F.col(key).alias("key"),
+        F.col(time).alias("time"),
+        c.alias("price"),
+        F.lag(c, 1).over(w).alias("l1"),
+        F.lag(c, 2).over(w).alias("l2"),
+    )
+    p, l1, l2 = F.col("price"), F.col("l1"), F.col("l2")
     pattern = (
-        F.when((c > l1) & (l1 > l2), F.lit("Bullish Trend"))
-        .when((c < l1) & (l1 < l2), F.lit("Bearish Trend"))
+        F.when((p > l1) & (l1 > l2), F.lit("Bullish Trend"))
+        .when((p < l1) & (l1 < l2), F.lit("Bearish Trend"))
     )
     return (
-        df.select(
-            F.col(key).alias("key"),
-            F.col(time).alias("time"),
-            pattern.alias("pattern"),
-        )
+        lagged.select("key", "time", pattern.alias("pattern"))
         .filter(F.col("pattern").isNotNull())
         .withColumn("pattern_category", F.lit("Trend"))
         .withColumn("confidence_score", F.lit(confidence))

@@ -44,10 +44,9 @@ class QuerySpec:
 
 QUERY_REGISTRY: dict[str, QuerySpec] = {}
 
-#: one built DataFrame per (loader, input versions): ~2 versions of the
-#: ten dashboard loaders; a superseded plan's shuffle files and
-#: broadcasts go to Spark's ContextCleaner once it is evicted
-_PLANS = VersionCache("plans", 20)
+#: one result per (loader, input paths), at their latest version: the
+#: ten dashboard loaders over one or two data directories
+_PLANS = VersionCache("plans", 20, promote=True)
 
 
 def register(
@@ -62,14 +61,19 @@ def register(
     ``inputs`` names every testdata table the function reads through
     ``load_table`` (directly or through ``_daily_close``), and promises
     that the DataFrame it builds depends on nothing else: not on the
-    time of the call, not on any other file. When given, the registry
-    stores (and the decorator returns) a wrapper that keeps the built
-    DataFrame in the ``plans`` cache (io/cache.py), keyed on the name
+    time of the call, not on any other file. It also promises a bounded
+    result (a LIMIT, or one row per key or bucket), because the rows are
+    kept in the heap of the session's JVM, as the reference's
+    ``st.cache_data`` keeps them in its process. When given, the
+    registry stores (and the decorator returns) a wrapper that caches
+    the result in the ``plans`` cache (io/cache.py), keyed on the name
     and the ``file_version`` of each input, statted before any planning.
-    A hit returns the same DataFrame object, so its ``collect()`` reuses
-    the analysed and planned query and the shuffle and broadcast stages
-    an earlier action finished: only the final stage runs. A replaced
-    input is a new key; an unstatable one is not cached.
+    A miss returns the planned DataFrame as built. The first hit runs it
+    once inside the JVM and keeps its rows as a local relation, which it
+    returns; from then on a hit returns that relation, whose
+    ``collect()`` starts no Spark job. A replaced input is a new key and
+    drops the entry of the old version; an unstatable input is not
+    cached.
 
     Session confs are not in the key. The cache hits only for the
     session object that built the entry, and every session the registry
@@ -93,8 +97,12 @@ def _cached_plan(name: str, fn, inputs: tuple[str, ...]):
     @functools.wraps(fn)
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
         versions = tuple(file_version(table_path(t, sf_dir)) for t in inputs)
-        key = None if None in versions else (name, versions)
-        return _PLANS.get_or_compute(spark, key, lambda: fn(spark, sf_dir))
+        if None in versions:
+            return fn(spark, sf_dir)
+        paths = tuple(v[0] for v in versions)
+        return _PLANS.get_or_compute(
+            spark, (name, versions), lambda: fn(spark, sf_dir), (name, paths)
+        )
 
     return run
 
