@@ -637,6 +637,33 @@ def test_daily_close_checkpointed_once_per_events_version(spark, tmp_path):
     assert after["hits"] - before["hits"] == 3
 
 
+def test_caches_keep_only_the_latest_version_of_a_path(spark, tmp_path):
+    """Three `events` versions landed by atomic rename in one directory:
+    after each, the `daily_close` and `scans` caches hold exactly one
+    entry for that path, at its current stamp."""
+    import pyarrow as pa
+
+    from trading_dashboard_spark import query_registry
+    from trading_dashboard_spark.io import readers
+    from trading_dashboard_spark.io.cache import file_version
+
+    path = str(tmp_path / "events.parquet")
+    table = _events_table(0, 300)
+    for k in range(3):
+        if k:
+            last_us = table.column("ts").cast(pa.int64())[-1].as_py()
+            batch = _events_table(k, 60, table.num_rows,
+                                  last_us - 1_704_067_200_000_000)
+            table = pa.concat_tables([table, batch])
+        _land(table, path)
+        assert _spark_bars(query_registry._daily_close(spark, str(tmp_path))
+                           ) == _duckdb_bars(table), k
+        version = file_version(path)
+        for cache in (query_registry._DAILY_BARS, readers._SCANS):
+            held = [v for v in cache if v[0] == version[0]]
+            assert held == [version], (k, held)
+
+
 def test_version_key_misses_same_size_replacement_with_preserved_mtime(
     spark, tmp_path
 ):
@@ -687,15 +714,17 @@ def test_version_cache_concurrent_misses_compute_once(spark):
         return object()
 
     with ThreadPoolExecutor(4) as pool:
-        futures = [pool.submit(cache.get_or_compute, spark, "cold", slow)
+        futures = [pool.submit(cache.get_or_compute, spark, ("cold", 1), slow)
                    for _ in range(4)]
         assert started.wait(30)
         with ThreadPoolExecutor(1) as side:
             other = side.submit(
-                cache.get_or_compute, spark, "other", lambda: "fast"
+                cache.get_or_compute, spark, ("other", 1), lambda: "fast"
             )
             assert other.result(timeout=10) == "fast"  # "cold" still runs
-        assert cache.get_or_compute(spark, "other", lambda: "recomputed") == "fast"
+        assert cache.get_or_compute(
+            spark, ("other", 1), lambda: "recomputed"
+        ) == "fast"
         assert not any(f.done() for f in futures)
         release.set()
         values = [f.result(timeout=30) for f in futures]

@@ -175,6 +175,52 @@ def test_detect_trends_computes_each_lag_window_once(spark):
     assert windows[0].count("windowspecdefinition") == 2
 
 
+def test_volatility_confidence_rounds_like_its_oracle(spark, sf_dir, tmp_path):
+    """High 288.07 over low 40.0 is a ratio of 620.1749…: Spark's
+    ``round`` gives 620.18, the portable floor form of the
+    `trading_patterns_top100` oracle 620.17. The loader equals its
+    oracle when that day is the latest one."""
+    import shutil
+
+    import duckdb
+    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from tools.check_oracle import compare
+    from trading_dashboard_spark.io.readers import table_path
+    from trading_dashboard_spark.queries import QUERY_REGISTRY
+
+    d = str(tmp_path)
+    shutil.copy(table_path("customer", sf_dir), table_path("customer", d))
+    day_us = 86_400_000_000
+    t0 = 1_704_067_200_000_000  # 2024-01-01
+    ticks = [(2, t0, 10.0), (1, t0 + 4 * day_us, 40.0),
+             (1, t0 + 4 * day_us + 60_000_000, 288.07),
+             (1, t0 + 4 * day_us + 120_000_000, 150.0)]
+    pq.write_table(pa.table({
+        "event_id": pa.array(range(len(ticks)), pa.int64()),
+        "ts": pa.array([t for _u, t, _v in ticks], pa.timestamp("us")),
+        "user_id": pa.array([u for u, _t, _v in ticks], pa.int64()),
+        "event_type": ["click"] * len(ticks),
+        "value": pa.array([v for _u, _t, v in ticks], pa.float64()),
+        "props": ['{"k": 1}'] * len(ticks),
+    }), table_path("events", d))
+
+    spec = QUERY_REGISTRY["trading_patterns_top100"]
+    df = spec.fn(spark, d)
+    got = pd.DataFrame.from_records(df.collect(), columns=df.columns)
+    con = duckdb.connect()
+    for t in spec.inputs:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM "
+                    f"read_parquet('{table_path(t, d)}')")
+    want = con.execute(spec.oracle).fetchdf()
+    con.close()
+    assert want["confidence_score"].tolist() == [620.17]
+    problems = compare("trading_patterns_top100", got, want)
+    assert not problems, problems
+
+
 def test_correlate_signal_with_price_defaults(spark):
     news = spark.createDataFrame(
         [("A", dt.date(2024, 1, 2), 0.5), ("B", dt.date(2024, 1, 2), -0.5)],

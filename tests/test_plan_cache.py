@@ -75,8 +75,9 @@ def _fields(df) -> list:
 def _plans_under(d) -> list[tuple[str, tuple]]:
     """(loader, input versions) of every ``plans`` entry reading ``d``."""
     root = os.path.abspath(d)
-    return [(name, versions) for _app, (name, versions) in query_registry._PLANS
-            if os.path.dirname(versions[0][0]) == root]
+    return [(name, tuple(zip(paths, stamps)))
+            for (name, paths), stamps in query_registry._PLANS
+            if os.path.dirname(paths[0]) == root]
 
 
 def test_cached_loaders_are_the_dashboard_loaders():

@@ -24,7 +24,8 @@ from trading_dashboard_spark.queries import QUERY_REGISTRY
 
 
 def _plan(spark, sf_dir, name: str) -> str:
-    df = QUERY_REGISTRY[name].fn(spark, sf_dir)
+    fn = QUERY_REGISTRY[name].fn
+    df = getattr(fn, "__wrapped__", fn)(spark, sf_dir)  # not a cached result
     return df._jdf.queryExecution().executedPlan().toString()
 
 

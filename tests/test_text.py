@@ -1547,7 +1547,7 @@ def test_removed_ids_memo_hits_and_safe_eviction(spark, tmp_path):
 
     qt.clear_removed_ids_memo()
     dirs = []
-    for j in range(qt._REMOVED_IDS_MEMO_MAX + 1):
+    for j in range(qt._REMOVED_IDS_MEMO.max_entries + 1):
         d = tmp_path / f"c{j}"
         d.mkdir()
         # pairwise-distinct token sets (no shared shingles) except the
@@ -1574,7 +1574,7 @@ def test_removed_ids_memo_hits_and_safe_eviction(spark, tmp_path):
     # fill past the bound: entry 0 is evicted, but r1 must stay usable
     for d in dirs[1:]:
         qt.nonsurvivor_removed_ids(load_table(spark, "documents", d))
-    assert len(qt._REMOVED_IDS_MEMO) == qt._REMOVED_IDS_MEMO_MAX
+    assert len(qt._REMOVED_IDS_MEMO) == qt._REMOVED_IDS_MEMO.max_entries
     assert r1.count() == n0  # evicted-but-held relation still readable
 
     # LRU, not FIFO (r10 ADVICE): a HIT refreshes recency, so the hit

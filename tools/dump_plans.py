@@ -418,7 +418,8 @@ def main() -> None:
                         "ccnet_perplexity_buckets"}
             else {}
         )
-        df = QUERY_REGISTRY[name].fn(spark, SF_DIR, **kwargs)
+        fn = QUERY_REGISTRY[name].fn  # the loader, not its cached result
+        df = getattr(fn, "__wrapped__", fn)(spark, SF_DIR, **kwargs)
         cache = None
         if isinstance(df, tuple):  # some _lazy hooks hand back
             df, cache = df         # (df, persisted-base) — caller releases

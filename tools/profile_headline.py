@@ -69,9 +69,11 @@ def main() -> None:
 
     print(f"{'query':34s} {'build':>7s} {'explain':>8s} {'exec':>7s}  shape")
     for name in names:
+        # profile the loader, not its cached result (register(inputs=))
         spec = QUERY_REGISTRY[name]
+        fn = getattr(spec.fn, "__wrapped__", spec.fn)
         t0 = time.time()
-        df = spec.fn(spark, SF_DIR)
+        df = fn(spark, SF_DIR)
         build_s = time.time() - t0
 
         t0 = time.time()
@@ -84,9 +86,7 @@ def main() -> None:
         best = float("inf")
         for _ in range(args.runs):
             t0 = time.time()
-            spec.fn(spark, SF_DIR).write.mode("overwrite").format(
-                "noop"
-            ).save()
+            fn(spark, SF_DIR).write.mode("overwrite").format("noop").save()
             best = min(best, time.time() - t0)
 
         shape = " ".join(

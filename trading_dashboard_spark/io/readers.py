@@ -21,7 +21,7 @@ from .cache import VersionCache, file_version
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-#: lazy scan handles per table version (see io/cache.py)
+#: lazy scan handles per table path, at its latest version (io/cache.py)
 _SCANS = VersionCache("scans", 64)
 
 

@@ -6,15 +6,15 @@ server-side as window expressions so the client receives finished columns
 (SURVEY.md §3.2) and the work distributes across executors.
 
 All but EMA are pure window frames (JVM-side, whole-stage codegen). EMA is
-recursive — not expressible as a Spark frame — so it ships two forms:
+recursive — not expressible as a Spark frame — so it ships these forms:
 
 - ``ema``: exact pandas parity (``ewm(span, adjust=False)``,
   indicators.py:8) via ``applyInPandas`` per key. Per-key history is small
   (one row per trading day), so the grouped-map batches stay tiny even when
   the table is huge: this scales with keys × history, and keys partition.
-- ``ema_sql``: pure-SQL recurrence unrolled with the ``aggregate`` higher-
-  order function over ``collect_list`` — kept for environments where Python
-  workers are unavailable; quadratic-ish per key, only for short histories.
+- ``ema_window`` / ``ema_series_sql``: the JVM lanes, as blocked window
+  expressions and as one ``aggregate`` fold over an ordered array (the
+  fold ``macd_sql`` uses).
 """
 
 from __future__ import annotations
@@ -466,20 +466,6 @@ def macd_auto(
     out = macd_window(df, value_col, keys, order, fast, slow, signal_span)
     return out.select(
         *keys, order, "macd", "macd_signal", "macd_hist"
-    )
-
-
-def ema_sql(value_list: Column, span: int) -> Column:
-    """Pure-SQL EMA over a pre-collected ordered array (fallback form).
-
-    ``aggregate(slice(xs,1,k), ...)`` unrolled recurrence; use only on
-    short per-key histories.
-    """
-    alpha = 2.0 / (span + 1.0)
-    return F.aggregate(
-        value_list,
-        F.lit(None).cast("double"),
-        lambda acc, x: F.when(acc.isNull(), x).otherwise(alpha * x + (1.0 - alpha) * acc),
     )
 
 

@@ -11,6 +11,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..functions import pround
 from .relational import safe_div
 from .windows import per_key_window, rolling
 
@@ -96,7 +97,8 @@ def detect_volatility(
     (full_stock_pipeline.py:475-482).
 
     ``(high - low) / NULLIF(low, 0) * 100`` with the zero guard; the ratio
-    itself is the confidence score, as in the reference (:478).
+    itself is the confidence score, as in the reference (:478), rounded
+    to 2 dp with the portable ``pround`` its oracles use.
     """
     vol = safe_div(F.col(high) - F.col(low), F.col(low)) * 100.0
     return (
@@ -111,6 +113,6 @@ def detect_volatility(
             "time",
             F.lit("High Volatility").alias("pattern"),
             F.lit("Volatility").alias("pattern_category"),
-            F.round(F.col("vol_pct"), 2).alias("confidence_score"),
+            pround("vol_pct", 2).alias("confidence_score"),
         )
     )

@@ -1167,11 +1167,10 @@ def _removal_ctes() -> str:
 #: — LSH pairs plus the checkpointed CC loop, the dominant constant of
 #: the whole composition family (~190 s of the ×100 suite). The closure
 #: is cached per corpus version (plan hash plus input-file stat, see
-#: io/cache.py), so a rewritten corpus misses. Values are eagerly
-#: localCheckpointed one-column id relations (dup-rate-bounded, slim),
-#: the bm25 persisted-slim-cache precedent.
-_REMOVED_IDS_MEMO = VersionCache("removed_ids", 4, checkpoint=True)
-_REMOVED_IDS_MEMO_MAX = _REMOVED_IDS_MEMO.max_entries
+#: io/cache.py), so a rewritten corpus misses and replaces the entry.
+#: Values are eagerly localCheckpointed one-column id relations
+#: (dup-rate-bounded, slim), the bm25 persisted-slim-cache precedent.
+_REMOVED_IDS_MEMO = VersionCache("removed_ids", 4)
 
 #: Sibling memo one level DOWN the same closure (r11 optimization): the
 #: near-dup cluster LABELS relation (id, component) — the LSH pair pass
@@ -1181,7 +1180,7 @@ _REMOVED_IDS_MEMO_MAX = _REMOVED_IDS_MEMO.max_entries
 #: Same keying as `_REMOVED_IDS_MEMO`; values are slim two-long-column
 #: checkpoints bounded by the clustered-doc count (dup-rate-bounded,
 #: never corpus-sized).
-_CLUSTER_LABELS_MEMO = VersionCache("cluster_labels", 4, checkpoint=True)
+_CLUSTER_LABELS_MEMO = VersionCache("cluster_labels", 4)
 
 
 def clear_removed_ids_memo() -> None:
@@ -1193,7 +1192,7 @@ def clear_removed_ids_memo() -> None:
     _CLUSTER_LABELS_MEMO.clear(release_rank_cache)
 
 
-def near_dup_cluster_labels(docs, memo: bool = True):
+def near_dup_cluster_labels(docs):
     """Near-dup cluster labels ``(id, component)`` for ``docs`` under the
     production MinHash config — the LSH pair relation (shingle cache
     shared across its three plan references via ``persist=True``; the
@@ -1210,16 +1209,14 @@ def near_dup_cluster_labels(docs, memo: bool = True):
             docs, num_hashes=_NUM_HASHES, bands=_BANDS, shingle_n=3,
             jaccard_threshold=_JACCARD_T, persist=True,
         )
-        return connected_components(pairs)
+        return connected_components(pairs).localCheckpoint(eager=True)
 
-    if memo:
-        return _CLUSTER_LABELS_MEMO.get_or_compute(
-            docs.sparkSession, relation_version(docs), _compute
-        )
-    return _compute()
+    return _CLUSTER_LABELS_MEMO.get_or_compute(
+        docs.sparkSession, relation_version(docs), _compute
+    )
 
 
-def nonsurvivor_removed_ids(docs, memo: bool = True):
+def nonsurvivor_removed_ids(docs):
     """Spark lane of :func:`_removal_ctes`: the dedup removal set as a
     one-column ``id`` relation (near-dup cluster members that lost the
     longest-wins survivor election). Pairs are LSH-sized, CC is the
@@ -1228,13 +1225,12 @@ def nonsurvivor_removed_ids(docs, memo: bool = True):
     dup-rate-bounded, nothing corpus-sized. Shared by the dedup
     compositions (same call sites as the oracle fragment); repeat calls
     on the same corpus return the memoized checkpointed relation (see
-    `_REMOVED_IDS_MEMO`; ``memo=False`` forces a fresh computation).
-    r11: the pair+CC stage is itself the memoized
+    `_REMOVED_IDS_MEMO`). r11: the pair+CC stage is itself the memoized
     :func:`near_dup_cluster_labels` relation, so a session that already
     clustered this corpus pays only the survivor election here."""
 
     def _compute():
-        cc = near_dup_cluster_labels(docs, memo=memo)
+        cc = near_dup_cluster_labels(docs)
         members = cc.join(
             docs.select(F.col("doc_id").alias("id"), "n_chars"), "id"
         )
@@ -1245,13 +1241,12 @@ def nonsurvivor_removed_ids(docs, memo: bool = True):
             members.join(survivors, "component")
             .filter(F.col("id") != F.col("survivor_id"))
             .select("id")
+            .localCheckpoint(eager=True)
         )
 
-    if memo:
-        return _REMOVED_IDS_MEMO.get_or_compute(
-            docs.sparkSession, relation_version(docs), _compute
-        )
-    return _compute()
+    return _REMOVED_IDS_MEMO.get_or_compute(
+        docs.sparkSession, relation_version(docs), _compute
+    )
 
 
 @register(
@@ -3823,7 +3818,13 @@ def _winnowed_sel(docs):
     with the window form pinned row-for-row at sf0.01, ×10 (992,554
     rows) and ×100 (9,928,665 rows); paired ×100 5.0–6.3 → 3.0–3.8 s
     (−40 %), ×10 ~1.1 → ~0.97 s. Fingerprint traffic downstream is
-    unchanged: ~2/(w+1) of gram positions."""
+    unchanged: ~2/(w+1) of gram positions.
+
+    Assumes unique ``doc_id``s, as in ``documents``: two rows sharing
+    one would each emit a selection, duplicating (doc_id, fp). Memory is
+    unbounded per row: the selkey array holds tokens − k + 1 42-char
+    strings, ~56 B each in Spark's array layout (~5.6 MB for a
+    100k-token document), beside the token array."""
     from .text.analysis import tokenize
 
     k, w = _WINNOW_K, _WINNOW_W
@@ -4446,7 +4447,7 @@ def fails_or(cols):
 #: published-pipeline composition on the same corpus. The value is the
 #: SLIM (doc_id, score) relation — two columns, one row per ≥2-token
 #: doc — the same class as the removal-closure id set.
-_CCNET_SCORED_MEMO = VersionCache("ccnet_scored", 4, checkpoint=True)
+_CCNET_SCORED_MEMO = VersionCache("ccnet_scored", 4)
 
 
 def clear_ccnet_scored_memo() -> None:
@@ -4515,7 +4516,8 @@ def _ccnet_scored_df(spark, docs, memo: bool = True):
 
     if memo:
         return _CCNET_SCORED_MEMO.get_or_compute(
-            spark, relation_version(docs), _compute
+            spark, relation_version(docs),
+            lambda: _compute().localCheckpoint(eager=True),
         )
     return _compute()
 

@@ -66,14 +66,14 @@ def register(
     kept in the heap of the session's JVM, as the reference's
     ``st.cache_data`` keeps them in its process. When given, the
     registry stores (and the decorator returns) a wrapper that caches
-    the result in the ``plans`` cache (io/cache.py), keyed on the name
-    and the ``file_version`` of each input, statted before any planning.
-    A miss returns the planned DataFrame as built. The first hit runs it
-    once inside the JVM and keeps its rows as a local relation, which it
-    returns; from then on a hit returns that relation, whose
-    ``collect()`` starts no Spark job. A replaced input is a new key and
-    drops the entry of the old version; an unstatable input is not
-    cached.
+    the result in the ``plans`` cache (io/cache.py): one entry per name
+    and input paths, stamped with each input's ``file_version``, statted
+    before any planning. A miss returns the planned DataFrame as built.
+    The first hit runs it once inside the JVM and keeps its rows as a
+    local relation, which it returns; from then on a hit returns that
+    relation, whose ``collect()`` starts no Spark job. A replaced input
+    is a new stamp, whose result replaces the entry; an unstatable input
+    is not cached.
 
     Session confs are not in the key. The cache hits only for the
     session object that built the entry, and every session the registry
@@ -96,12 +96,12 @@ def register(
 def _cached_plan(name: str, fn, inputs: tuple[str, ...]):
     @functools.wraps(fn)
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        versions = tuple(file_version(table_path(t, sf_dir)) for t in inputs)
+        versions = [file_version(table_path(t, sf_dir)) for t in inputs]
         if None in versions:
             return fn(spark, sf_dir)
-        paths = tuple(v[0] for v in versions)
+        paths, stamps = zip(*versions)
         return _PLANS.get_or_compute(
-            spark, (name, versions), lambda: fn(spark, sf_dir), (name, paths)
+            spark, ((name, paths), stamps), lambda: fn(spark, sf_dir)
         )
 
     return run
@@ -182,8 +182,9 @@ def day_scoped_order_key(ts_col: str = "ts", id_col: str = "event_id"):
     )
 
 
-#: per-(user, day) bars, one eager checkpoint per ``events`` version
-_DAILY_BARS = VersionCache("daily_close", 4, checkpoint=True)
+#: per-(user, day) bars, one eager checkpoint per ``events`` path, at
+#: its latest version
+_DAILY_BARS = VersionCache("daily_close", 4)
 
 
 def _daily_close(spark, sf_dir) -> DataFrame:
@@ -205,7 +206,7 @@ def _daily_close(spark, sf_dir) -> DataFrame:
     ``events`` version runs the aggregate eagerly and caches it as a
     ``localCheckpoint`` (io/cache.py); later calls on the same version
     return that relation without starting a job, and a replaced
-    ``events`` file is a new version."""
+    ``events`` file is a new version, whose bars replace the old ones."""
 
     def bars() -> DataFrame:
         ev = _t(spark, sf_dir, "events")
@@ -221,7 +222,7 @@ def _daily_close(spark, sf_dir) -> DataFrame:
             F.max("value").alias("high"),
             F.min("value").alias("low"),
             F.count(F.lit(1)).alias("n_events"),
-        )
+        ).localCheckpoint(eager=True)
 
     version = file_version(table_path("events", sf_dir))
     return _DAILY_BARS.get_or_compute(spark, version, bars)
