@@ -1,8 +1,8 @@
 """The ``plans`` cache of the dashboard loaders (query_registry.register
-with ``inputs=``): exact across input versions, promoted to its rows on
-the first hit, one version per loader, complete in its declared inputs,
-built and promoted once under concurrency, and never shared across
-sessions."""
+with ``inputs=``): a miss stores the loader's rows and a hit returns
+them; exact across input versions, one version per loader, complete in
+its declared inputs, built once under concurrency, never shared across
+sessions, and never holding a loader whose run raised."""
 
 import os
 import shutil
@@ -93,12 +93,12 @@ def test_cached_loaders_are_the_dashboard_loaders():
 def test_plan_cache_exact_across_events_versions(spark, sf01, tmp_path):
     """Three consecutive `events` versions, each landed by atomic rename
     next to a fixed `customer`. On every version, for every cached
-    loader: a miss's collect starts the jobs the unwrapped loader's does;
-    the first hit promotes the plan to its rows (at most one job, same
-    schema), and from then on every call returns that relation, whose
-    collect starts no job and equals the DuckDB oracle. The nine `events`
-    loaders miss once per version and keep only their latest version,
-    while `company_list` keeps hitting."""
+    loader: a miss call starts the jobs the unwrapped loader's collect
+    starts and returns the loader's rows with its schema; from then on
+    every call returns that relation, whose collect starts no job and
+    equals the DuckDB oracle. The nine `events` loaders miss once per
+    version and keep only their latest version, while `company_list`
+    keeps hitting."""
     import pyarrow as pa
 
     d = _copy_inputs(["customer"], sf01, tmp_path)
@@ -119,28 +119,25 @@ def test_plan_cache_exact_across_events_versions(spark, sf01, tmp_path):
         for name in CACHED:
             tag = f"plans-{k}-{name}"
             fn = QUERY_REGISTRY[name].fn
+            # built first, so any shared daily-bars checkpoint is counted here
+            plain = fn.__wrapped__(spark, d)
+            plain_jobs = _jobs(sc, f"{tag}-plain", plain.collect)[1]
             misses = cache_stats()["plans"]["misses"]
-            df = fn(spark, d)
-            rows, jobs = _jobs(sc, f"{tag}-first", df.collect)
-            want = _assert_oracle(con, name, _frame(df, rows))
-            seen[name].add(want.to_csv(index=False))
+            df, call_jobs = _jobs(sc, f"{tag}-call", lambda: fn(spark, d))
             if cache_stats()["plans"]["misses"] > misses:
-                plain = fn.__wrapped__(spark, d)
-                assert jobs == _jobs(sc, f"{tag}-plain", plain.collect)[1], (k, name)
-            else:  # `customer` did not change: already promoted
-                assert (name, k, jobs) == ("company_list", k, 0)
-
-            promoted, promote_jobs = _jobs(sc, f"{tag}-promote", lambda: fn(spark, d))
-            assert promote_jobs <= 1, (k, name)
-            assert _fields(promoted) == _fields(df), (k, name)
-            third = fn(spark, d)
-            third_rows, third_jobs = _jobs(sc, f"{tag}-third", third.collect)
-            assert third is promoted and third_jobs == 0, (k, name)
-            _assert_oracle(con, name, _frame(third, third_rows))
+                assert call_jobs == plain_jobs, (k, name)
+            else:  # `customer` did not change: already stored
+                assert (name, k, call_jobs) == ("company_list", k, 0)
+            assert _fields(df) == _fields(plain), (k, name)
+            for i in range(3):  # the call's relation, then two later calls
+                got = df if i == 0 else fn(spark, d)
+                rows, jobs = _jobs(sc, f"{tag}-{i}", got.collect)
+                assert got is df and jobs == 0, (k, name, i)
+                want = _assert_oracle(con, name, _frame(got, rows))
+            seen[name].add(want.to_csv(index=False))
         after = cache_stats()["plans"]
         assert after["misses"] - before["misses"] == (10 if k == 0 else 9), k
         assert after["hits"] - before["hits"] == (20 if k == 0 else 21), k
-        assert after["promotions"] - before["promotions"] == (10 if k == 0 else 9), k
         live = _plans_under(d)
         assert sorted(n for n, _v in live) == sorted(CACHED), k
         for name, versions in live:  # none for a superseded version
@@ -177,9 +174,9 @@ def _four_threads(call) -> list:
 
 
 def test_plan_cache_concurrent_cold_key_builds_once(spark, sf01, tmp_path):
-    """Four threads asking for one cold key build the plan once: one
-    gets the plan, the three that waited share its promoted rows, and
-    every collect returns the oracle's rows."""
+    """Four threads asking for one cold key build it once: all four get
+    the one stored relation, and every collect returns the oracle's
+    rows."""
     d = _copy_inputs(["events", "customer"], sf01, tmp_path)
     fn = QUERY_REGISTRY["top_gainers"].fn
 
@@ -192,43 +189,24 @@ def test_plan_cache_concurrent_cold_key_builds_once(spark, sf01, tmp_path):
     after = cache_stats()["plans"]
     assert after["misses"] - before["misses"] == 1
     assert after["hits"] - before["hits"] == 3
-    assert after["promotions"] - before["promotions"] == 1
     frames = {id(df): df for df, _rows in results}
-    assert len(frames) == 2
+    assert len(frames) == 1
     con = _duck(d, ["events", "customer"])
     for df, rows in results:
         _assert_oracle(con, "top_gainers", _frame(df, rows))
     con.close()
 
 
-def test_plan_cache_concurrent_hits_promote_once(spark, sf01, tmp_path):
-    """Four threads hitting one built, not yet promoted key promote it
-    once and all get the same local relation; its collect starts no job."""
-    d = _copy_inputs(["events", "customer"], sf01, tmp_path)
-    fn = QUERY_REGISTRY["top_gainers"].fn
-    planned = fn(spark, d)
-    before = cache_stats()["plans"]
-    results = _four_threads(lambda: fn(spark, d))
-    after = cache_stats()["plans"]
-    assert after["hits"] - before["hits"] == 4
-    assert after["promotions"] - before["promotions"] == 1
-    assert after["misses"] == before["misses"]
-    assert all(df is results[0] for df in results) and results[0] is not planned
-    rows, jobs = _jobs(spark.sparkContext, "plans-promoted-concurrent", results[0].collect)
-    assert jobs == 0
-    assert rows == planned.collect()
-
-
 def test_plan_cache_never_serves_another_sessions_dataframe(
     spark, sf01, tmp_path
 ):
     """A session from `newSession()`, called through the driver adapter,
-    gets a plan and promoted rows of its own on the same input versions,
-    and so does the first session afterwards."""
+    gets rows of its own on the same input versions, and so does the
+    first session afterwards."""
     assert QUERY_REGISTRY["top_gainers"].fn is queries_relational.top_gainers
     d = _copy_inputs(["events", "customer"], sf01, tmp_path)
     top_gainers = queries_relational.top_gainers
-    mine = [top_gainers(spark, d), top_gainers(spark, d)]  # plan, rows
+    mine = [top_gainers(spark, d), top_gainers(spark, d)]  # a miss, a hit
     other = spark.newSession()
     call = contract.queries()["top_gainers"]
     theirs = [call(other, d), call(other, d)]
@@ -238,3 +216,44 @@ def test_plan_cache_never_serves_another_sessions_dataframe(
         assert df.collect() == mine[0].collect()
     again = top_gainers(spark, d)
     assert again.sparkSession is spark and all(again is not t for t in theirs)
+
+
+def test_a_loader_whose_run_raises_is_not_cached(spark, sf01, tmp_path):
+    """An `events` version with one `event_id` at 2^26, where the packed
+    day-scoped order key raises. `top_gainers` (which raises while its
+    daily bars are checkpointed) and a loader that builds lazily and
+    raises only when run both raise on every call; each call is a miss
+    and leaves no entry. The next, valid version is served exactly."""
+    import pyarrow as pa
+
+    d = _copy_inputs(["customer"], sf01, tmp_path)
+    path = table_path("events", d)
+    top_gainers = QUERY_REGISTRY["top_gainers"].fn
+    day_keys = query_registry._cached_plan(
+        "day_keys_test",
+        lambda spark, sf_dir: load_table(spark, "events", sf_dir).select(
+            query_registry.day_scoped_order_key().alias("k")
+        ),
+        ("events",),
+    )
+    table = _events_table(0, 400)
+    ids = table.column("event_id").to_pylist()
+    ids[-1] = 1 << 26
+    _land(table.set_column(0, "event_id", pa.array(ids, pa.int64())), path)
+    for fn in (top_gainers, day_keys):
+        before = cache_stats()["plans"]
+        for _ in range(2):
+            with pytest.raises(Exception, match="day_scoped_order_key"):
+                fn(spark, d)
+        after = cache_stats()["plans"]
+        assert after["misses"] - before["misses"] == 2
+        assert after["hits"] == before["hits"]
+        assert _plans_under(d) == []
+
+    _land(table, path)
+    con = _duck(d, ["customer"])
+    con.register("events", table)
+    _assert_oracle(con, "top_gainers", _frame(top_gainers(spark, d)))
+    con.close()
+    assert day_keys(spark, d).count() == table.num_rows
+    assert sorted(n for n, _v in _plans_under(d)) == ["day_keys_test", "top_gainers"]

@@ -14,7 +14,6 @@ from trading_dashboard_spark.sources import (
     fetch_quotes_distributed,
     write_landing_json,
 )
-from trading_dashboard_spark.sources.landing import write_landing_json_partitioned
 
 
 def _make_fake_fetcher():
@@ -90,24 +89,6 @@ def test_landing_write_drops_foreign_dates(spark, tmp_path):
     write_landing_json(df, landing, "2024", "01", "08")
     back = read_quote_landing(spark, landing, "2024", "01", "08")
     assert back.count() == 1
-
-
-def test_landing_partitioned_multi_day(spark, tmp_path):
-    df = spark.createDataFrame(
-        [
-            ("AAPL", "2024-01-08", 10.0),
-            ("MSFT", "2024-01-08", 20.0),
-            ("AAPL", "2024-01-09", 11.0),
-        ],
-        ["symbol", "date", "c"],
-    )
-    landing = str(tmp_path / "landing")
-    write_landing_json_partitioned(df, landing)
-    scan = spark.read.json(landing)
-    # partition columns materialize; a date predicate prunes directories
-    day = scan.filter("y = '2024' and m = '01' and d = '08'")
-    assert day.count() == 2
-    assert scan.count() == 3
 
 
 def test_export_dataset_csv_json_roundtrip(spark, tmp_path):

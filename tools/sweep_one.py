@@ -133,12 +133,14 @@ def main() -> None:
     out: dict[str, dict] = {}
     for name in names:
         ent = QUERY_REGISTRY[name]
+        # time the loader itself, not its result-caching wrapper
+        fn = getattr(ent.fn, "__wrapped__", ent.fn)
         if explain:
-            ent.fn(spark, tmp).explain("formatted")
+            fn(spark, tmp).explain("formatted")
         best = float("inf")
         for _ in range(runs):
             t0 = time.time()
-            ent.fn(spark, tmp).write.mode("overwrite").format("noop").save()
+            fn(spark, tmp).write.mode("overwrite").format("noop").save()
             best = min(best, time.time() - t0)
         duck = None
         if name in DUCK_INFEASIBLE:

@@ -24,19 +24,16 @@ Three kinds of value share the mechanism:
 - ``_daily_close`` and the ``queries_text`` corpus relations cache the
   eager ``localCheckpoint``s their computes make, so their consumers
   pay the job once per version.
-- ``query_registry.register`` caches the result of each loader that
+- ``query_registry.register`` caches the rows of each loader that
   declares ``inputs`` (the ``plans`` cache), slotted on the query name
   and input paths and stamped with their file stamps, like the
   reference's ``st.cache_data`` but exact instead of a 1 h TTL. A miss
-  returns the planned DataFrame as built, with no extra job. The first
-  hit promotes it (``promote=True``): :func:`local_rows` runs the cached
-  DataFrame once inside the JVM, reusing its finished shuffle and
-  broadcast stages (the one job a repeat of the plan would run), and
-  the entry keeps the rows as a local relation, whose actions start no
-  job; the plan's shuffle files and broadcasts go to Spark's
-  ContextCleaner. ``df.cache()`` would not do: the CacheManager matches
-  on plan, and a scan of a replaced file plans the same, so a rebuilt
-  loader could be served old rows.
+  runs the loader once and stores its rows as a local relation; a hit
+  returns that relation, whose actions start no job.
+
+An entry keeps its value as computed and is never rewritten, so this
+module does not care what it caches; a ``compute()`` that raises
+stores nothing.
 
 An entry holds its stamp and a ``weakref`` to its session, and hits
 only when both match, so never for another session object nor one of a
@@ -46,9 +43,9 @@ eviction. Eviction (LRU over slots) drops the reference without
 unpersisting: a checkpoint's lineage is cut, so unpersisting one a
 caller still holds would break that caller; Spark's ContextCleaner
 reclaims it once unreferenced (``clear(release)`` releases
-explicitly). Concurrent misses on one slot compute once and an entry
-is promoted once (a per-slot lock); a hit never waits on another
-slot's computation. :func:`cache_stats` reports the counters.
+explicitly). Concurrent misses on one slot compute once (a per-slot
+lock); a hit never waits on another slot's computation.
+:func:`cache_stats` reports the counters.
 """
 
 from __future__ import annotations
@@ -58,8 +55,6 @@ import threading
 import weakref
 from typing import NamedTuple
 from urllib.parse import unquote, urlparse
-
-from pyspark.sql import DataFrame
 
 _CACHES: weakref.WeakValueDictionary = weakref.WeakValueDictionary()
 
@@ -96,29 +91,15 @@ class _Entry(NamedTuple):
     stamp: object
     session: weakref.ref
     value: object
-    settled: bool  # False: a plan to be promoted to its rows on a hit
-
-
-def local_rows(df: DataFrame) -> DataFrame:
-    """``df``'s rows as a local relation with ``df``'s schema. The rows
-    are collected inside the JVM (one job, reusing every stage ``df``
-    already finished) and never pass through Python; no action on the
-    result starts a job."""
-    spark = df.sparkSession
-    jdf = spark._jsparkSession.createDataFrame(
-        df._jdf.collectAsList(), df._jdf.schema()
-    )
-    return DataFrame(jdf, spark)
 
 
 class VersionCache:
     """Bounded LRU: slot → the value of its latest stamp, guarded by a
-    session weakref. With ``promote=True`` a cached DataFrame is
-    replaced by its :func:`local_rows` on its first hit."""
+    session weakref."""
 
-    def __init__(self, name: str, max_entries: int, promote: bool = False):
-        self.max_entries, self.promote = max_entries, promote
-        self.hits = self.misses = self.evictions = self.promotions = 0
+    def __init__(self, name: str, max_entries: int):
+        self.max_entries = max_entries
+        self.hits = self.misses = self.evictions = 0
         self._entries: dict = {}
         self._slot_locks: dict = {}
         self._lock = threading.Lock()
@@ -127,52 +108,37 @@ class VersionCache:
     def get_or_compute(self, spark, version, compute):
         """The value cached for ``version`` (a ``(slot, stamp)`` pair),
         or ``compute()`` cached in its place. Without a version,
-        ``compute()`` is returned as is: not cached, not counted."""
+        ``compute()`` is returned as is: not cached, not counted. A
+        ``compute()`` that raises caches nothing."""
         if version is None:
             return compute()
         slot, stamp = version
         with self._lock:
             entry = self._lookup(slot, stamp, spark)
-            if entry is not None and entry.settled:
+            if entry is not None:
                 self.hits += 1
                 return entry.value
             slot_lock = self._slot_locks.setdefault(slot, threading.Lock())
         with slot_lock:
             try:
-                return self._fill(spark, slot, stamp, compute)
+                with self._lock:
+                    entry = self._lookup(slot, stamp, spark)  # filled while we waited?
+                    if entry is not None:
+                        self.hits += 1
+                        return entry.value
+                    self.misses += 1
+                value = compute()
+                with self._lock:
+                    if self._entries.pop(slot, None) is not None:  # another stamp
+                        self.evictions += 1
+                    self._entries[slot] = _Entry(stamp, weakref.ref(spark), value)
+                    while len(self._entries) > self.max_entries:
+                        self._drop(next(iter(self._entries)))
+                return value
             finally:
                 with self._lock:
-                    entry = self._entries.get(slot)
-                    if entry is None or entry.settled:
-                        self._slot_locks.pop(slot, None)
-
-    def _fill(self, spark, slot, stamp, compute):
-        """Under ``slot``'s lock: compute a missing value, or promote an
-        unsettled one."""
-        with self._lock:
-            entry = self._lookup(slot, stamp, spark)  # filled while we waited?
-            if entry is None:
-                self.misses += 1
-            else:
-                self.hits += 1
-                if entry.settled:
-                    return entry.value
-        if entry is not None:
-            value = local_rows(entry.value)
-            with self._lock:
-                self.promotions += 1
-                if self._entries.get(slot) is entry:  # not dropped meanwhile
-                    self._entries[slot] = entry._replace(value=value, settled=True)
-            return value
-        value = compute()
-        with self._lock:
-            if self._entries.pop(slot, None) is not None:  # another stamp
-                self.evictions += 1
-            self._entries[slot] = _Entry(stamp, weakref.ref(spark), value,
-                                         not self.promote)
-            while len(self._entries) > self.max_entries:
-                self._drop(next(iter(self._entries)))
-        return value
+                    if self._slot_locks.get(slot) is slot_lock:
+                        del self._slot_locks[slot]
 
     def _lookup(self, slot, stamp, spark):
         """``slot``'s entry at ``stamp``, made the most recent; None if
@@ -210,10 +176,10 @@ class VersionCache:
 
 
 def cache_stats() -> dict[str, dict[str, int]]:
-    """Hits, misses, evictions, promotions and live entries of every
-    cache, by name."""
+    """Hits, misses, evictions and live entries of every cache, by
+    name."""
     return {
         name: {"hits": c.hits, "misses": c.misses, "evictions": c.evictions,
-               "promotions": c.promotions, "entries": len(c)}
+               "entries": len(c)}
         for name, c in list(_CACHES.items())
     }

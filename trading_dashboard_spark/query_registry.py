@@ -44,9 +44,9 @@ class QuerySpec:
 
 QUERY_REGISTRY: dict[str, QuerySpec] = {}
 
-#: one result per (loader, input paths), at their latest version: the
-#: ten dashboard loaders over one or two data directories
-_PLANS = VersionCache("plans", 20, promote=True)
+#: one result's rows per (loader, input paths), at their latest version:
+#: the ten dashboard loaders over one or two data directories
+_PLANS = VersionCache("plans", 20)
 
 
 def register(
@@ -68,12 +68,12 @@ def register(
     registry stores (and the decorator returns) a wrapper that caches
     the result in the ``plans`` cache (io/cache.py): one entry per name
     and input paths, stamped with each input's ``file_version``, statted
-    before any planning. A miss returns the planned DataFrame as built.
-    The first hit runs it once inside the JVM and keeps its rows as a
-    local relation, which it returns; from then on a hit returns that
-    relation, whose ``collect()`` starts no Spark job. A replaced input
-    is a new stamp, whose result replaces the entry; an unstatable input
-    is not cached.
+    before any planning. A miss runs the loader once inside the JVM and
+    stores its rows as a local relation (:func:`local_rows`), which it
+    returns; a hit returns that relation. Neither's ``collect()`` starts
+    a Spark job. A replaced input is a new stamp, whose rows replace the
+    entry; an unstatable input is not cached, and a loader whose run
+    raises leaves no entry.
 
     Session confs are not in the key. The cache hits only for the
     session object that built the entry, and every session the registry
@@ -101,10 +101,22 @@ def _cached_plan(name: str, fn, inputs: tuple[str, ...]):
             return fn(spark, sf_dir)
         paths, stamps = zip(*versions)
         return _PLANS.get_or_compute(
-            spark, ((name, paths), stamps), lambda: fn(spark, sf_dir)
+            spark, ((name, paths), stamps),
+            lambda: local_rows(fn(spark, sf_dir)),
         )
 
     return run
+
+
+def local_rows(df: DataFrame) -> DataFrame:
+    """``df``'s rows as a local relation with ``df``'s schema. The rows
+    are collected inside the JVM (the jobs of one ``df.collect()``) and
+    never pass through Python; no action on the result starts a job."""
+    spark = df.sparkSession
+    jdf = spark._jsparkSession.createDataFrame(
+        df._jdf.collectAsList(), df._jdf.schema()
+    )
+    return DataFrame(jdf, spark)
 
 
 def _t(spark, sf_dir, name) -> DataFrame:
