@@ -69,7 +69,7 @@ BENCH_QUERIES = [
     "lsh_ann_top3",           # bucketed ANN
     "ivf_ann_probe_top5",     # IVF cell-pruned ANN
     "late_shipment_priorities",  # EXISTS -> semi join (TPC-H Q4 shape)
-    "macd_indicator",         # single-pass grouped-map indicator chain
+    "macd_indicator",         # JVM collect_list + EMA array folds
     "event_sessionization",   # lag+cumsum sessions, single exchange
     "tfidf_top_terms",        # explode -> df join -> per-doc rank
     "chunk_boilerplate_ratio",  # chunk fp explode -> fp-keyed join (r3)

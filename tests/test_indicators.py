@@ -173,25 +173,27 @@ def test_holt_linear_matches_reference_recurrence(spark):
 
 
 def test_macd_three_lanes_agree(spark):
-    """The three MACD lanes — grouped-map pandas (`macd`), collect_list
-    fold (`macd_sql`, query default), segmented-scan windows
-    (`macd_window`, the >10⁷-row form) — must agree with pandas ewm to
-    float noise, including keys long enough to span multiple exponent
-    blocks in the window lane."""
-    import numpy as np
-    import pandas as pd
+    """Three independent MACD computations agree to float noise: the
+    `macd_sql` fold (the one Spark lane), the pandas chain
+    ``ewm(span, adjust=False)`` for the fast, slow and signal EMAs, and a
+    plain-python EMA recurrence. Keys of 1, 3, 40, 80 and 700 rows run
+    from a single-row key (every EMA equals the value, so macd, signal
+    and histogram are 0) through a long one."""
+    from trading_dashboard_spark.operators.indicators import macd_sql
 
-    from trading_dashboard_spark.operators.indicators import (
-        ema_window, macd, macd_sql, macd_window,
-    )
+    def ema_py(xs, span):
+        a = 2.0 / (span + 1)
+        out = [xs[0]]
+        for x in xs[1:]:
+            out.append(a * x + (1 - a) * out[-1])
+        return out
 
     rng = np.random.default_rng(11)
     rows = []
-    for k, n in (("a", 3), ("b", 40), ("c", 700)):
+    for k, n in (("a", 1), ("b", 3), ("c", 40), ("d", 80), ("e", 700)):
         for i, v in enumerate(rng.normal(100, 15, n)):
             rows.append((k, i, float(v)))
     pdf = pd.DataFrame(rows, columns=["sym", "t", "close"])
-    sdf = spark.createDataFrame(pdf)
 
     g = pdf.groupby("sym")["close"]
     fast = g.transform(lambda s: s.ewm(span=12, adjust=False).mean())
@@ -203,95 +205,53 @@ def test_macd_three_lanes_agree(spark):
     pdf["macd_hist"] = pdf["macd"] - pdf["macd_signal"]
     exp = pdf.sort_values(["sym", "t"]).reset_index(drop=True)
 
-    lanes = {
-        "grouped_map": macd(sdf, "close", "sym", "t"),
-        "fold": macd_sql(sdf, "close", "sym", "t"),
-        # block=64 forces the 700-row key through 11 carry blocks
-        "window": None,
-    }
-    w1 = ema_window(sdf, "close", "sym", "t", 12, "_f", block=64)
-    w2 = ema_window(w1, "close", "sym", "t", 26, "_s", block=64)
-    w2 = w2.withColumn("macd", F.col("_f") - F.col("_s")).drop("_f", "_s")
-    w3 = ema_window(w2, "macd", "sym", "t", 9, "macd_signal", block=64)
-    lanes["window"] = w3.withColumn(
-        "macd_hist", F.col("macd") - F.col("macd_signal")
+    got = (
+        macd_sql(spark.createDataFrame(pdf[["sym", "t", "close"]]),
+                 "close", "sym", "t")
+        .toPandas().sort_values(["sym", "t"]).reset_index(drop=True)
     )
-
-    for lane, df in lanes.items():
-        got = df.toPandas().sort_values(["sym", "t"]).reset_index(drop=True)
-        for col in ("macd", "macd_signal", "macd_hist"):
-            assert np.allclose(
-                got[col].to_numpy(float), exp[col].to_numpy(float), atol=1e-9
-            ), (lane, col)
-
-
-def test_macd_window_default_block_and_plan(spark):
-    """`macd_window` with the default 512-row block: correct on a
-    >512-row key (multi-block carry), and the per-row lane is pure
-    window/join codegen — no Python evaluator in the plan."""
-    import numpy as np
-    import pandas as pd
-
-    from trading_dashboard_spark.operators.indicators import macd_window
-
-    rng = np.random.default_rng(3)
-    n = 1300
-    pdf = pd.DataFrame(
-        {"sym": "x", "t": range(n), "close": rng.normal(50, 5, n)}
-    )
-    sdf = spark.createDataFrame(pdf)
-    out = macd_window(sdf, "close", "sym", "t")
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "Python" not in plan and "ArrowEval" not in plan
-
-    got = out.toPandas().sort_values("t").reset_index(drop=True)
-    fast = pdf["close"].ewm(span=12, adjust=False).mean()
-    slow = pdf["close"].ewm(span=26, adjust=False).mean()
-    macd_e = fast - slow
-    sig_e = macd_e.ewm(span=9, adjust=False).mean()
-    assert np.allclose(got["macd"].to_numpy(float), macd_e, atol=1e-9)
-    assert np.allclose(got["macd_signal"].to_numpy(float), sig_e, atol=1e-9)
-
-
-def test_macd_auto_lane_switch(spark):
-    """r5 verdict #3: `macd_auto` must pick the collect_list fold below
-    both thresholds and the segmented-scan window lane above either —
-    asserted on the PLAN (fold = sort_array(collect_list...); window
-    lane = Window nodes, no collect_list) — and both choices return the
-    same values and column set."""
-    import numpy as np
-    import pandas as pd
-
-    from trading_dashboard_spark.operators.indicators import macd_auto
-
-    rng = np.random.default_rng(7)
-    rows = []
-    for k, n in (("a", 30), ("b", 45)):
-        for i, v in enumerate(rng.normal(100, 10, n)):
-            rows.append((k, i, float(v)))
-    sdf = spark.createDataFrame(
-        pd.DataFrame(rows, columns=["sym", "t", "close"])
-    )
-
-    # fold lane: one collect_list aggregate, NO window operator
-    fold = macd_auto(sdf, "close", "sym", "t")
-    plan = fold._jdf.queryExecution().executedPlan().toString()
-    assert "collect_list" in plan and "Window" not in plan
-
-    # tiny history threshold forces the segmented-scan window lane
-    win = macd_auto(sdf, "close", "sym", "t", max_fold_history=10)
-    plan = win._jdf.queryExecution().executedPlan().toString()
-    assert "Window" in plan
-    # tiny total-rows threshold forces it too
-    win2 = macd_auto(sdf, "close", "sym", "t", max_fold_rows=10)
-    assert "Window" in (
-        win2._jdf.queryExecution().executedPlan().toString()
-    )
-
-    a = fold.toPandas().sort_values(["sym", "t"]).reset_index(drop=True)
-    b = win.toPandas().sort_values(["sym", "t"]).reset_index(drop=True)
-    assert list(a.columns) == list(b.columns)
+    assert list(got.columns) == ["sym", "t", "macd", "macd_signal", "macd_hist"]
+    assert got[["sym", "t"]].equals(exp[["sym", "t"]])
     for col in ("macd", "macd_signal", "macd_hist"):
         assert np.allclose(
-            a[col].to_numpy(float), b[col].to_numpy(float), atol=1e-9
+            got[col].to_numpy(float), exp[col].to_numpy(float), atol=1e-9
         ), col
+    for sym, g in exp.groupby("sym"):
+        xs = g["close"].tolist()
+        m = [f - s for f, s in zip(ema_py(xs, 12), ema_py(xs, 26))]
+        sig = ema_py(m, 9)
+        hist = [a - b for a, b in zip(m, sig)]
+        mine = got[got.sym == sym]
+        for col, ref in (("macd", m), ("macd_signal", sig), ("macd_hist", hist)):
+            assert np.allclose(mine[col].to_numpy(float), ref, atol=1e-9), (
+                sym, col,
+            )
+    single = got[got.sym == "a"].iloc[0]
+    assert single.macd == pytest.approx(0.0)
+    assert single.macd_hist == pytest.approx(0.0)
+
+
+def test_macd_indicator_runs_only_the_fold(spark, sf_dir):
+    """A warmed `macd_indicator` call starts no more Spark jobs than
+    `macd_sql` over the same cached `_daily_close` bars: the bars are
+    not checkpointed a second time."""
+    from test_plan_cache import _jobs
+
+    from trading_dashboard_spark.operators.indicators import macd_sql
+    from trading_dashboard_spark.queries_windows import macd_indicator
+    from trading_dashboard_spark.query_registry import _daily_close
+
+    sc = spark.sparkContext
+
+    def query():
+        return macd_indicator(spark, sf_dir).collect()
+
+    def fold():
+        daily = _daily_close(spark, sf_dir).select("user_id", "d", "close")
+        return macd_sql(daily, "close", "user_id", "d", 12, 26, 9).collect()
+
+    query(), fold()  # warm: the bars are cached
+    rows, n_query = _jobs(sc, "macd-indicator", query)
+    _, n_fold = _jobs(sc, "macd-fold", fold)
+    assert rows
+    assert n_query <= n_fold, (n_query, n_fold)

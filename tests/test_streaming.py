@@ -294,7 +294,7 @@ def test_interval_full_outer_emits_both_unmatched_sides(spark, tmp_path):
     from trading_dashboard_spark.streaming.ingest import (
         run_stream_to_table, stream_events,
     )
-    from trading_dashboard_spark.streaming.joins import interval_full_outer
+    from trading_dashboard_spark.streaming.joins import interval_join
 
     t0 = dt.datetime(2024, 3, 1)
 
@@ -337,9 +337,9 @@ def test_interval_full_outer_emits_both_unmatched_sides(spark, tmp_path):
             )
         )
 
-    joined = interval_full_outer(
+    joined = interval_join(
         side("click", "l"), side("purchase", "r"),
-        "user_id", "click_ts", "purchase_ts",
+        "user_id", "click_ts", "purchase_ts", "full_outer",
         horizon="1 HOUR", watermark="2 hours",
     )
     out = run_stream_to_table(joined, "t_fo", output_mode="append")

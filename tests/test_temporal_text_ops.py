@@ -11,7 +11,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from trading_dashboard_spark.operators.indicators import macd
+from trading_dashboard_spark.operators.indicators import macd_sql
 from trading_dashboard_spark.operators.temporal import sessionize
 from trading_dashboard_spark.text.analysis import repetition_signals
 
@@ -57,22 +57,22 @@ def test_macd_matches_pandas(spark):
     rows.append(("C", 0, 42.0))  # single-row partition
     df = spark.createDataFrame(rows, "sym string, t long, close double")
     got = (
-        macd(df, "close", "sym", "t")
+        macd_sql(df, "close", "sym", "t")
         .toPandas()
         .sort_values(["sym", "t"])
         .reset_index(drop=True)
     )
+    closes = {(r[0], r[1]): r[2] for r in rows}
     for sym, g in got.groupby("sym"):
-        s = g.sort_values("t")["close"]
+        g = g.sort_values("t")
+        s = pd.Series([closes[(sym, t)] for t in g["t"]])
         fast = s.ewm(span=12, adjust=False).mean()
         slow = s.ewm(span=26, adjust=False).mean()
         m = fast - slow
         sig = m.ewm(span=9, adjust=False).mean()
-        np.testing.assert_allclose(g.sort_values("t")["macd"], m, atol=1e-9)
-        np.testing.assert_allclose(g.sort_values("t")["macd_signal"], sig, atol=1e-9)
-        np.testing.assert_allclose(
-            g.sort_values("t")["macd_hist"], m - sig, atol=1e-9
-        )
+        np.testing.assert_allclose(g["macd"], m, atol=1e-9)
+        np.testing.assert_allclose(g["macd_signal"], sig, atol=1e-9)
+        np.testing.assert_allclose(g["macd_hist"], m - sig, atol=1e-9)
     # single-row: all EMAs equal the value -> macd/signal/hist are 0
     c = got[got.sym == "C"].iloc[0]
     assert c.macd == pytest.approx(0.0) and c.macd_hist == pytest.approx(0.0)

@@ -73,8 +73,7 @@ COMMENTARY = {
     "macd_indicator": (
         "JVM fold lane (r5): ONE collect_list aggregate per key, then "
         "fast/slow/signal EMAs as aggregate() array folds + zip_with — "
-        "no Python evaluator anywhere in the plan, one shuffle total; "
-        "the segmented-scan macd_window form is the >10^7-row path."
+        "no Python evaluator anywhere in the plan, one shuffle total."
     ),
     "orderkey_gap_audit": (
         "Distributed gap lag (r5): the raw-fact window partitions by the "

@@ -28,7 +28,7 @@ def run_once(spark, sf_dir: str, mfpt: int) -> float:
     from trading_dashboard_spark.streaming.ingest import (
         run_stream_to_table, stream_events,
     )
-    from trading_dashboard_spark.streaming.joins import interval_full_outer
+    from trading_dashboard_spark.streaming.joins import interval_join
 
     path = f"{sf_dir.rstrip('/')}/events.parquet"
     t0 = time.time()
@@ -54,8 +54,8 @@ def run_once(spark, sf_dir: str, mfpt: int) -> float:
                 F.col("event_id").alias("purchase_id"),
                 F.col("ts").alias("purchase_ts"))
     )
-    joined = interval_full_outer(
-        clicks, purchases, "user_id", "click_ts", "purchase_ts",
+    joined = interval_join(
+        clicks, purchases, "user_id", "click_ts", "purchase_ts", "full_outer",
         horizon="1 HOUR", watermark="2 hours",
     )
     out = run_stream_to_table(

@@ -6,20 +6,19 @@ server-side as window expressions so the client receives finished columns
 (SURVEY.md §3.2) and the work distributes across executors.
 
 All but EMA are pure window frames (JVM-side, whole-stage codegen). EMA is
-recursive — not expressible as a Spark frame — so it ships these forms:
+recursive — not expressible as a Spark frame — so it ships two forms:
 
 - ``ema``: exact pandas parity (``ewm(span, adjust=False)``,
-  indicators.py:8) via ``applyInPandas`` per key. Per-key history is small
-  (one row per trading day), so the grouped-map batches stay tiny even when
+  indicators.py:8) in the grouped-sorted mapInPandas lane. Per-key history
+  is small (one row per trading day), so the batches stay tiny even when
   the table is huge: this scales with keys × history, and keys partition.
-- ``ema_window`` / ``ema_series_sql``: the JVM lanes, as blocked window
-  expressions and as one ``aggregate`` fold over an ordered array (the
-  fold ``macd_sql`` uses).
+- ``ema_series_sql``: the JVM form, one ``aggregate`` fold over an ordered
+  array — the fold ``macd_sql`` uses.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window as W, WindowSpec, functions as F
+from pyspark.sql import Column, DataFrame, WindowSpec, functions as F
 
 from .windows import per_key_window, rolling
 
@@ -105,53 +104,6 @@ def ema(
     return grouped_sorted_map(df, keys, order, fn, out_schema)
 
 
-def macd(
-    df: DataFrame,
-    value_col: str,
-    keys: list[str] | str,
-    order: list[str] | str,
-    fast: int = 12,
-    slow: int = 26,
-    signal_span: int = 9,
-) -> DataFrame:
-    """MACD — fast/slow EMA spread plus its signal EMA and histogram.
-
-    Standard composition (the indicator family the reference's dashboard
-    tier computes client-side in pandas): ``macd = ema(fast) - ema(slow)``,
-    ``macd_signal = ema(macd, signal_span)``, ``macd_hist = macd - signal``
-    — all EMAs ``adjust=False`` recurrences.
-
-    Chaining three ``ema()`` calls would cost three shuffles; because
-    every series shares the same (key, order), one grouped-sorted
-    mapInPandas pass (operators/grouped — thousands of keys per Arrow
-    batch, no per-group Python round-trip) computes all of them: one
-    shuffle, one sort, three ``ewm`` evaluations per group.
-    """
-    from .grouped import grouped_sorted_map
-
-    keys = [keys] if isinstance(keys, str) else keys
-    order = [order] if isinstance(order, str) else order
-    schema_parts = [f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields]
-    out_schema = ", ".join(
-        schema_parts + ["macd double", "macd_signal double", "macd_hist double"]
-    )
-
-    def fn(pdf):
-        pdf = pdf.copy()
-        g = pdf.groupby(keys, sort=False)[value_col]
-        fast_e = g.transform(lambda s: s.ewm(span=fast, adjust=False).mean())
-        slow_e = g.transform(lambda s: s.ewm(span=slow, adjust=False).mean())
-        m = fast_e - slow_e
-        pdf["macd"] = m
-        pdf["macd_signal"] = pdf.groupby(keys, sort=False)["macd"].transform(
-            lambda s: s.ewm(span=signal_span, adjust=False).mean()
-        )
-        pdf["macd_hist"] = pdf["macd"] - pdf["macd_signal"]
-        return pdf
-
-    return grouped_sorted_map(df, keys, order, fn, out_schema)
-
-
 def ema_series_sql(xs: Column, span: int) -> Column:
     """The whole adjust=False EMA series of ordered array ``xs`` as one
     JVM ``aggregate`` fold — ``y[t] = α·x[t] + (1-α)·y[t-1]``, seeded
@@ -184,143 +136,6 @@ def ema_series_sql(xs: Column, span: int) -> Column:
     )
 
 
-_EMA_BLOCK = 512
-
-
-def ema_window(
-    df: DataFrame,
-    value_col: str,
-    keys: list[str] | str,
-    order: str,
-    span: int,
-    out_col: str,
-    block: int = _EMA_BLOCK,
-) -> DataFrame:
-    """W7, JVM lane — the adjust=False EMA as pure window expressions
-    (whole-stage codegen end to end; no Python worker, no per-key
-    array materialization).
-
-    The recurrence ``y[t] = α·x[t] + (1-α)·y[t-1]`` is a linear scan,
-    so it admits the prefix-sum closed form ``y[t] = (1-α)^t·(y[0] +
-    α·Σ x[j]·(1-α)^(-j))`` — but the raw form overflows doubles once
-    ``(1-α)^(-j)`` passes ~1e308. The scale-safe fix is the classic
-    segmented scan: exponents are taken RELATIVE to ``block``-row
-    blocks (bounded by ``(1/(1-α))^(block-1)`` — for any span ≥ 2,
-    α ≤ 2/3 so the bound is ≤ 3^511 < 1e245, safe for EVERY span at
-    ANY history length), and the per-block carry ``c_b`` follows the
-    tiny linear recurrence ``c_{b+1} = A_b·c_b + K_b`` folded per key
-    over the #blocks-sized summary array.
-
-    Plan shape: one shuffle on ``keys`` (both windows share the
-    partitioning), a #rows/block-sized summary aggregate + fold, and
-    an equi-join of the carries back on (keys, block) — broadcastable
-    whenever keys×blocks fits, co-partitioned otherwise. Per-key
-    history is calendar-bounded in this engine (one row per trading
-    day), so blocks per key stay single-digit while key count scales.
-    """
-    if span < 2:
-        return df.withColumn(out_col, F.col(value_col).cast("double"))
-    alpha = 2.0 / (span + 1.0)
-    beta = 1.0 - alpha  # decay
-    r = 1.0 / beta
-    keys = [keys] if isinstance(keys, str) else list(keys)
-    w = W.partitionBy(*keys).orderBy(order)
-    wcum = w.rowsBetween(W.unboundedPreceding, W.currentRow)
-
-    x = F.col(value_col).cast("double")
-    sel1 = df.withColumn("_rn", F.row_number().over(w)).select(
-        "*",
-        ((F.col("_rn") - 1) / block).cast("int").alias("_blk"),
-        ((F.col("_rn") - 1) % block).alias("_j"),
-        F.first(x).over(wcum).alias("_fx"),
-    )
-    u = F.pow(F.lit(r), F.col("_j")) * x
-    wblk = W.partitionBy(*keys, "_blk").orderBy(order).rowsBetween(
-        W.unboundedPreceding, W.currentRow
-    )
-    sel2 = sel1.select("*", F.sum(u).over(wblk).alias("_P"))
-
-    summaries = sel1.groupBy(*keys, "_blk").agg(
-        F.count(F.lit(1)).alias("_len"),
-        F.sum(u).alias("_Pend"),
-        F.min("_fx").alias("_fx0"),  # per-key constant; min == the value
-    )
-    # carries: c_0 = x[1] (seeds y[1] = x[1]); c_{b+1} = A_b·c_b + K_b
-    # with A_b = (1-α)^len_b, K_b = α·(1-α)^(len_b - 1)·Pend_b.
-    blocks = F.sort_array(
-        F.collect_list(
-            F.struct(
-                F.col("_blk").alias("b"),
-                F.pow(F.lit(beta), F.col("_len")).alias("a"),
-                (F.lit(alpha)
-                 * F.pow(F.lit(beta), F.col("_len") - 1)
-                 * F.col("_Pend")).alias("k"),
-            )
-        )
-    )
-    carries = (
-        summaries.groupBy(*keys)
-        .agg(blocks.alias("_bs"), F.min("_fx0").alias("_c0"))
-        .select(
-            *keys,
-            F.explode(
-                F.aggregate(
-                    F.col("_bs"),
-                    F.array(F.struct(
-                        F.lit(0).cast("int").alias("b"),
-                        F.col("_c0").cast("double").alias("c"),
-                    )),
-                    lambda acc, s: F.concat(
-                        acc,
-                        F.array(F.struct(
-                            (s["b"] + 1).cast("int").alias("b"),
-                            (s["a"] * F.element_at(acc, -1)["c"] + s["k"])
-                            .alias("c"),
-                        )),
-                    ),
-                )
-            ).alias("_bc"),
-        )
-        .select(*keys, F.col("_bc.b").alias("_blk"), F.col("_bc.c").alias("_c"))
-    )
-    joined = sel2.join(carries, [*keys, "_blk"], "inner")
-    y = F.pow(F.lit(beta), F.col("_j")) * (
-        F.lit(beta) * F.col("_c") + F.lit(alpha) * F.col("_P")
-    )
-    return joined.withColumn(out_col, y).drop(
-        "_rn", "_blk", "_j", "_fx", "_P", "_c"
-    )
-
-
-def macd_window(
-    df: DataFrame,
-    value_col: str,
-    keys: list[str] | str,
-    order: str,
-    fast: int = 12,
-    slow: int = 26,
-    signal_span: int = 9,
-) -> DataFrame:
-    """MACD via three `ema_window` segmented-scan passes — the
-    100 TB-asymptotics lane: O(1) codegen'd work per row, no Python, no
-    per-key arrays. Costs ~8 exchanges/joins of plan fixed overhead, so
-    it loses to `macd_sql` below ~10⁷ rows (measured ×10 sweep: 2.97 s
-    vs 1.27 s) and wins above, where per-row cost dominates
-    (fold ≈ 14 µs/row interpreted vs ≈ 0.1 µs/row here).
-
-    Returns the input columns plus macd, macd_signal, macd_hist — one
-    row per input row.
-    """
-    keys = [keys] if isinstance(keys, str) else list(keys)
-    out = ema_window(df, value_col, keys, order, fast, "_ema_fast")
-    out = ema_window(out, value_col, keys, order, slow, "_ema_slow")
-    out = out.withColumn(
-        "macd", F.col("_ema_fast") - F.col("_ema_slow")
-    ).drop("_ema_fast", "_ema_slow")
-    out = ema_window(out, "macd", keys, order, signal_span, "macd_signal")
-    return out.withColumn("macd_hist", F.col("macd") - F.col("macd_signal"))
-
-
 def macd_sql(
     df: DataFrame,
     value_col: str,
@@ -330,21 +145,16 @@ def macd_sql(
     slow: int = 26,
     signal_span: int = 9,
 ) -> DataFrame:
-    """JVM-lane MACD, collect_list form — the query default (round-4
-    verdict #3: the grouped mapInPandas lane ran 8.7× DuckDB at ×10;
-    this one stays inside the JVM end to end with the lowest fixed
-    overhead of the three lanes: ONE shuffle, no Python worker, no
-    joins).
+    """MACD(fast, slow, signal_span) — ``macd = ema(fast) - ema(slow)``,
+    ``macd_signal = ema(macd, signal_span)``, ``macd_hist = macd -
+    signal``, every EMA the ``adjust=False`` recurrence — inside the JVM
+    end to end: ONE shuffle, no Python worker, no joins.
 
     One ``collect_list`` aggregate per key materializes the ordered
-    close array; fast/slow/signal EMAs evaluate as three
+    value array; fast/slow/signal EMAs evaluate as three
     `ema_series_sql` folds plus `zip_with` arithmetic. Per-key cost is
     O(history²) array copies — history is calendar-bounded (daily
-    bars), so this scales with KEY COUNT, each key a bounded constant;
-    for histories beyond ~10⁴ rows/key or tables past ~10⁷ rows, use
-    `macd_window` (segmented scan, O(1)/row) — measured crossover in
-    BENCHMARKS.md. The grouped-map lane (`macd`) is the pandas-parity
-    check.
+    bars), so this scales with KEY COUNT, each key a bounded constant.
 
     Returns (keys…, ``order``, macd, macd_signal, macd_hist) — one row
     per input row.
@@ -385,87 +195,6 @@ def macd_sql(
         F.col("r.ms").alias("macd"),
         F.col("r.sig").alias("macd_signal"),
         (F.col("r.ms") - F.col("r.sig")).alias("macd_hist"),
-    )
-
-
-#: Adaptive MACD lane policy (round-5 verdict #3, mirroring
-#: ranks.NTILE_EXACT_MAX_ROWS): the collect_list fold lane has the
-#: lowest fixed overhead but costs O(history²) array copies per key, so
-#: it degrades silently on long per-key histories and loses to the
-#: segmented scan's O(1)/row past ~10⁷ total rows (measured crossover,
-#: BENCHMARKS.md). The probe is one partial-aggregated count job whose
-#: shuffle carries key-cardinality rows, not data.
-MACD_FOLD_MAX_ROWS = 10_000_000
-MACD_FOLD_MAX_HISTORY = 10_000
-
-
-def macd_auto(
-    df: DataFrame,
-    value_col: str,
-    keys: list[str] | str,
-    order: str,
-    fast: int = 12,
-    slow: int = 26,
-    signal_span: int = 9,
-    max_fold_rows: int = MACD_FOLD_MAX_ROWS,
-    max_fold_history: int = MACD_FOLD_MAX_HISTORY,
-    materialize: bool = False,
-) -> DataFrame:
-    """Adaptive MACD: probe per-key history length + total rows, then
-    pick the lane the data shape wants: `macd_sql`'s single-shuffle
-    fold below both thresholds, `macd_window`'s segmented scan above
-    either — so the caller never has to know the crossover, and a 100×
-    scale-up cannot silently land on the O(history²) lane (the
-    ranks.ntile_buckets adaptive policy, applied to W7).
-
-    Probe cost (round-6 verdict #2 — "piggyback the count job on the
-    checkpoint pass"): with ``materialize=True`` and a date-typed
-    ``order`` column, the probe rides the eager ``localCheckpoint``
-    action as ``observe()`` metrics — total row count plus the
-    calendar span of ``order``, which upper-bounds every key's history
-    (a key cannot have more daily bars than there are days), so lane
-    safety needs ZERO extra jobs. The span bound is conservative: a
-    27+-year sparse corpus may take the segmented-scan lane although
-    the fold would have been fine — safe either way, both lanes are
-    value-identical. Non-date order columns (no cheap history bound)
-    fall back to the exact key-cardinality count job against the
-    now-materialized input."""
-    from pyspark.sql.types import DateType
-
-    keys = [keys] if isinstance(keys, str) else list(keys)
-    max_hist = total = None
-    if materialize:
-        from pyspark.sql import Observation
-
-        if isinstance(df.schema[order].dataType, DateType):
-            obs = Observation()
-            df = df.observe(
-                obs,
-                F.count(F.lit(1)).alias("total"),
-                F.min(order).alias("lo"),
-                F.max(order).alias("hi"),
-            ).localCheckpoint(eager=True)
-            m = obs.get
-            total = m["total"] or 0
-            max_hist = (
-                (m["hi"] - m["lo"]).days + 1 if m["hi"] is not None else 0
-            )
-        else:
-            df = df.localCheckpoint(eager=True)
-    if max_hist is None:
-        probe = (
-            df.groupBy(*keys)
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .agg(F.max("_n").alias("mx"), F.sum("_n").alias("total"))
-            .first()
-        )
-        max_hist = probe["mx"] or 0
-        total = probe["total"] or 0
-    if total <= max_fold_rows and max_hist <= max_fold_history:
-        return macd_sql(df, value_col, keys, order, fast, slow, signal_span)
-    out = macd_window(df, value_col, keys, order, fast, slow, signal_span)
-    return out.select(
-        *keys, order, "macd", "macd_signal", "macd_hist"
     )
 
 

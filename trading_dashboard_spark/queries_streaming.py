@@ -230,13 +230,13 @@ def streaming_sliding_counts(spark, sf_dir):
 def streaming_click_attribution(spark, sf_dir):
     """Stream-stream interval join: purchases attributed to any click by
     the same user in the preceding hour (streaming/joins.
-    interval_attribution). Watermarks on BOTH sides + the time-range
+    interval_join, inner). Watermarks on BOTH sides + the time-range
     bound let the state store expire buffered rows — the only
     unbounded-stream-safe shape for a stream×stream join. Driven to
     completion over static data, the result equals the batch
     theta-join the oracle runs."""
     from .streaming.ingest import run_stream_to_table, stream_events
-    from .streaming.joins import interval_attribution
+    from .streaming.joins import interval_join
 
     path = f"{sf_dir.rstrip('/')}/events.parquet"
     clicks = (
@@ -258,8 +258,8 @@ def streaming_click_attribution(spark, sf_dir):
             F.col("value").alias("purchase_value"),
         )
     )
-    joined = interval_attribution(
-        clicks, purchases, "user_id", "click_ts", "purchase_ts",
+    joined = interval_join(
+        clicks, purchases, "user_id", "click_ts", "purchase_ts", "inner",
         horizon="1 HOUR", watermark="2 hours",
     )
     out = run_stream_to_table(joined, "click_attribution", output_mode="append")
@@ -391,7 +391,7 @@ def streaming_hourly_ohlc(spark, sf_dir):
 def streaming_abandoned_clicks(spark, sf_dir):
     """LEFT OUTER stream-stream interval join — the abandonment signal:
     clicks with NO same-user purchase inside the following hour
-    (streaming/joins.interval_left_outer). The subtle Structured
+    (streaming/joins.interval_join, left_outer). The subtle Structured
     Streaming semantics under test: an unmatched left row null-emits
     only after the joint watermark proves no in-horizon match can
     arrive, so end-of-stream leaves the youngest clicks undecided —
@@ -401,7 +401,7 @@ def streaming_abandoned_clicks(spark, sf_dir):
     runs. State is bounded by the watermark horizon on both sides —
     the unbounded-stream-safe shape."""
     from .streaming.ingest import run_stream_to_table, stream_events
-    from .streaming.joins import interval_left_outer
+    from .streaming.joins import interval_join
 
     path = f"{sf_dir.rstrip('/')}/events.parquet"
     # maturity horizon from the static copy (single-row bounded read):
@@ -436,8 +436,8 @@ def streaming_abandoned_clicks(spark, sf_dir):
             F.col("ts").alias("purchase_ts"),
         )
     )
-    joined = interval_left_outer(
-        clicks, purchases, "user_id", "click_ts", "purchase_ts",
+    joined = interval_join(
+        clicks, purchases, "user_id", "click_ts", "purchase_ts", "left_outer",
         horizon="1 HOUR", watermark="2 hours",
     )
     out = run_stream_to_table(
@@ -635,8 +635,8 @@ def streaming_scd2_asof_enrichment(spark, sf_dir):
 )
 def streaming_interval_full_outer_audit(spark, sf_dir):
     """FULL OUTER stream-stream interval join (streaming/joins.
-    interval_full_outer) — the last uncovered stream-stream join mode:
-    per user, in-horizon click→purchase matches PLUS both unmatched
+    interval_join, full_outer) — the last uncovered stream-stream join
+    mode: per user, in-horizon click→purchase matches PLUS both unmatched
     classes (abandoned clicks AND purchases with no preceding click —
     the attribution-gap audit). Both sides null-emit only when the
     joint watermark proves no partner can arrive, so BOTH lanes apply
@@ -645,7 +645,7 @@ def streaming_interval_full_outer_audit(spark, sf_dir):
     FULL OUTER the oracle runs. State on each side is bounded by the
     watermark horizon — the unbounded-stream-safe shape."""
     from .streaming.ingest import run_stream_to_table, stream_events
-    from .streaming.joins import interval_full_outer
+    from .streaming.joins import interval_join
 
     path = f"{sf_dir.rstrip('/')}/events.parquet"
     mx = (
@@ -676,8 +676,8 @@ def streaming_interval_full_outer_audit(spark, sf_dir):
             F.col("ts").alias("purchase_ts"),
         )
     )
-    joined = interval_full_outer(
-        clicks, purchases, "user_id", "click_ts", "purchase_ts",
+    joined = interval_join(
+        clicks, purchases, "user_id", "click_ts", "purchase_ts", "full_outer",
         horizon="1 HOUR", watermark="2 hours",
     )
     out = run_stream_to_table(

@@ -712,27 +712,16 @@ def _macd_oracle() -> str:
 
 @register("macd_indicator", _macd_oracle(), tags=("window", "W7", "udf"))
 def macd_indicator(spark, sf_dir):
-    """MACD(12,26,9) over the daily bars via the ADAPTIVE lane
-    (operators/indicators.macd_auto — round-5 verdict #3): one cheap
-    key-cardinality count probe picks `macd_sql`'s single-shuffle JVM
-    fold (collect_list + three adjust=False EMA `aggregate` folds, no
-    Python worker — lowest fixed overhead) below 10⁷ rows / 10⁴-row
-    histories, and `macd_window`'s segmented scan (O(1) codegen'd work
-    per row) above either threshold — so a 100× scale-up can never
-    silently land on the O(history²) fold. Both lanes are
-    value-identical (tests/test_indicators.py); the SQL oracle unrolls
-    the same recurrences in closed form."""
-    from .operators.indicators import macd_auto
+    """MACD(12,26,9) over the daily bars (operators/indicators.macd_sql):
+    one shuffle into a per-key ordered close array, then the fast, slow
+    and signal adjust=False EMAs as JVM `aggregate` folds — no Python
+    worker. `_daily_close` already caches the bars, so a warmed call
+    runs only the fold. The SQL oracle unrolls the same recurrences in
+    closed form."""
+    from .operators.indicators import macd_sql
 
-    # materialize=True: macd_auto eagerly localCheckpoints the bars
-    # (both the probe and the chosen lane read the materialization, so
-    # the events scan + daily aggregate run once) AND rides the lane
-    # probe on that same checkpoint action as observe() metrics — the
-    # r6 probe was a separate count job; now zero extra jobs (round-6
-    # verdict #2).
     daily = _daily_close(spark, sf_dir).select("user_id", "d", "close")
-    out = macd_auto(daily, "close", "user_id", "d", fast=12, slow=26,
-                    signal_span=9, materialize=True)
+    out = macd_sql(daily, "close", "user_id", "d", 12, 26, 9)
     return out.select(
         "user_id",
         F.date_format("d", "yyyy-MM-dd").alias("trade_date"),

@@ -53,7 +53,6 @@ def register(
     name: str,
     oracle: str | None,
     tags: tuple[str, ...] = (),
-    doc: str = "",
     inputs: tuple[str, ...] = (),
 ):
     """Register ``fn(spark, sf_dir) -> DataFrame`` as query ``name``.
@@ -86,7 +85,7 @@ def register(
         sql = portable_round_sql(oracle) if oracle else oracle
         run = _cached_plan(name, fn, inputs) if inputs else fn
         QUERY_REGISTRY[name] = QuerySpec(
-            run, sql, tags, doc or (fn.__doc__ or ""), inputs
+            run, sql, tags, fn.__doc__ or "", inputs
         )
         return run
 

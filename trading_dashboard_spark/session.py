@@ -64,9 +64,9 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) the engine's SparkSession.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (or ``local[*]``),
-    matching the test environment; on a cluster, pass ``None`` with a
-    pre-configured ``spark-submit`` and only the SQL confs apply.
+    ``master=None`` (the default) runs locally on
+    ``local[$SPARK_GRAFT_CPUS]`` (``local[*]`` when the variable is
+    unset); pass a master URL to run anywhere else.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     if master is None:

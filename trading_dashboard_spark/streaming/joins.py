@@ -18,83 +18,44 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 
-def interval_attribution(
+def interval_join(
     left: DataFrame,
     right: DataFrame,
     key: str,
     left_ts: str,
     right_ts: str,
+    how: str,
     horizon: str = "1 hour",
     watermark: str = "2 hours",
 ) -> DataFrame:
-    """Inner-join right-stream rows to left-stream rows of the same key
-    whose timestamp falls within [left_ts, left_ts + horizon].
+    """Stream-stream interval join: right-stream rows join left-stream
+    rows of the same key whose timestamp falls within [left_ts, left_ts
+    + horizon]; ``how`` is ``"inner"``, ``"left_outer"`` or
+    ``"full_outer"``.
 
-    Both inputs must be streaming DataFrames; columns are expected to be
-    pre-renamed to avoid collisions (the join keeps both sides' columns).
-    """
-    lw = left.withWatermark(left_ts, watermark)
-    rw = right.withWatermark(right_ts, watermark)
-    cond = (
-        (F.col(key + "_l") == F.col(key + "_r"))
-        & (F.col(right_ts) >= F.col(left_ts))
-        & (F.col(right_ts) <= F.col(left_ts) + F.expr(f"INTERVAL {horizon}"))
-    )
-    return lw.join(rw, cond, "inner")
+    Both inputs must be streaming DataFrames; the key columns are
+    expected pre-renamed to ``key + "_l"`` / ``key + "_r"`` (the join
+    keeps both sides' columns).
 
+    ``left_outer``: every left row emits — matched rows as they pair,
+    UNMATCHED rows with null right columns once the watermark proves no
+    in-horizon match can still arrive (Structured Streaming buffers the
+    left row in state until ``left_ts + horizon`` falls behind the joint
+    watermark, then null-emits in a no-data batch). The consequence
+    callers MUST handle: left rows younger than ``horizon + watermark``
+    at end-of-stream are still awaiting their verdict and are NOT
+    emitted as unmatched — a completeness cutoff (filter to mature rows)
+    is required for batch-equivalent results; see
+    `streaming_abandoned_clicks` for the canonical binding.
 
-def interval_left_outer(
-    left: DataFrame,
-    right: DataFrame,
-    key: str,
-    left_ts: str,
-    right_ts: str,
-    horizon: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """LEFT OUTER stream-stream interval join: every left row emits —
-    matched rows as they pair, UNMATCHED rows with null right columns
-    once the watermark proves no in-horizon match can still arrive
-    (Structured Streaming buffers the left row in state until
-    ``left_ts + horizon`` falls behind the joint watermark, then
-    null-emits in a no-data batch).
-
-    The consequence callers MUST handle: left rows younger than
-    ``horizon + watermark`` at end-of-stream are still awaiting their
-    verdict and are NOT emitted as unmatched — a completeness cutoff
-    (filter to mature rows) is required for batch-equivalent results;
-    see `streaming_abandoned_clicks` for the canonical binding.
-    """
-    lw = left.withWatermark(left_ts, watermark)
-    rw = right.withWatermark(right_ts, watermark)
-    cond = (
-        (F.col(key + "_l") == F.col(key + "_r"))
-        & (F.col(right_ts) >= F.col(left_ts))
-        & (F.col(right_ts) <= F.col(left_ts) + F.expr(f"INTERVAL {horizon}"))
-    )
-    return lw.join(rw, cond, "left_outer")
-
-
-def interval_full_outer(
-    left: DataFrame,
-    right: DataFrame,
-    key: str,
-    left_ts: str,
-    right_ts: str,
-    horizon: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """FULL OUTER stream-stream interval join — both sides null-emit:
-    an unmatched LEFT row once the watermark passes ``left_ts +
-    horizon`` (no in-horizon right partner can still arrive), an
-    unmatched RIGHT row once it passes ``right_ts`` (any left partner
-    would need ``left_ts ∈ [right_ts − horizon, right_ts]``, all behind
-    the watermark). State on both sides is watermark-bounded.
-
-    Same completeness caveat as `interval_left_outer`, now on BOTH
-    sides: rows younger than ``horizon + watermark`` at end-of-stream
-    are still awaiting their verdict, so batch-equivalent consumers
-    must apply a maturity cutoff to every emission class (see
+    ``full_outer``: both sides null-emit — an unmatched LEFT row once
+    the watermark passes ``left_ts + horizon``, an unmatched RIGHT row
+    once it passes ``right_ts`` (any left partner would need ``left_ts ∈
+    [right_ts − horizon, right_ts]``, all behind the watermark). State
+    on both sides is watermark-bounded. The same completeness caveat now
+    holds on BOTH sides: rows younger than ``horizon + watermark`` at
+    end-of-stream are still awaiting their verdict, so batch-equivalent
+    consumers must apply a maturity cutoff to every emission class (see
     `streaming_interval_full_outer_audit` for the canonical binding).
     """
     lw = left.withWatermark(left_ts, watermark)
@@ -104,7 +65,7 @@ def interval_full_outer(
         & (F.col(right_ts) >= F.col(left_ts))
         & (F.col(right_ts) <= F.col(left_ts) + F.expr(f"INTERVAL {horizon}"))
     )
-    return lw.join(rw, cond, "full_outer")
+    return lw.join(rw, cond, how)
 
 
 def stream_static_asof(
